@@ -1,7 +1,11 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the host's CPUs). The full record (per-rep
+timings, result rows, build-stage seconds) goes to BENCH/records/; the LAST
+stdout line is a compact summary, well under 2,000 bytes:
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "throughput_rows_per_sec": ...}
+   "throughput_rows_per_sec": ..., "queries": {name: min sec, ...},
+   "sf": ..., "cpus": ..., "host": {"nproc": ..., "mem_total_mb": ...},
+   "driver_memory": ..., "record": "BENCH/records/<file>.json"}
 
 Workload shape mirrors the reference benchmark harness
 (/root/reference/cpp/benchmarks/main.cpp): ~2,000 cap (1 km circle)
@@ -31,7 +35,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -50,6 +55,14 @@ def work_rows(n_points: int, n_regions: int, rows: dict) -> int:
     )
 
 
+def read_record(stdout: str) -> dict:
+    """The full record of a bench.py run, from its stdout: the last line
+    names the record file."""
+    summary = json.loads(stdout.strip().splitlines()[-1])
+    with open(os.path.join(ROOT, summary["record"])) as f:
+        return json.load(f)
+
+
 HEADLINE = [
     "index_build", "region_index_build_50k", "contains_2000_caps",
     "count_2000_caps", "region_contains_2000", "tile_assign_s2",
@@ -60,7 +73,9 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from rgm.session import host_cpus, host_mem_mb
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus()))
     # SPARK_GRAFT_STAGES=a,b: time ONLY those stages (tools/pairstage.py
     # runs one stage per subprocess so each stage's low/high legs share a
     # host window). State a requested stage needs (committed indexes, the
@@ -76,6 +91,7 @@ def main() -> None:
     from rgm.session import get_spark
 
     spark = get_spark(app_name="rgm-bench", cpus=cpus)
+    driver_memory = spark.sparkContext.getConf().get("spark.driver.memory")
 
     if want is not None:
         # Cold-process warmup (untimed): spawn the Python worker pool on
@@ -476,7 +492,20 @@ def main() -> None:
                 for s, sec in stages.items():
                     cur[s] = min(cur.get(s, sec), sec)
         out["build_stages"] = merged
-    print(json.dumps(out))
+    out["host"] = {"nproc": host_cpus(), "mem_total_mb": host_mem_mb()}
+    out["driver_memory"] = driver_memory
+    rec_dir = os.path.join(ROOT, "BENCH", "records")
+    os.makedirs(rec_dir, exist_ok=True)
+    rec = os.path.join(rec_dir, f"bench-c{cpus}-{time.strftime('%Y%m%dT%H%M%S')}.json")
+    with open(rec, "w") as f:
+        json.dump(out, f, indent=1)
+    summary = {
+        k: out[k]
+        for k in ("metric", "value", "unit", "throughput_rows_per_sec", "queries",
+                  "sf", "cpus", "reps", "host", "driver_memory")
+    }
+    summary["record"] = os.path.relpath(rec, ROOT)
+    print(json.dumps(summary, separators=(",", ":")))
 
 
 if __name__ == "__main__":

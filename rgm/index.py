@@ -92,23 +92,32 @@ def anc_lattice_sql(
     )
 
 
-def _ensure_region_cols(df: DataFrame) -> DataFrame:
-    """Add any missing canonical region columns as typed nulls."""
-    types = {
-        "kind": T.StringType(),
-        "lat": T.DoubleType(), "lng": T.DoubleType(), "radius_m": T.DoubleType(),
-        "lat_lo": T.DoubleType(), "lat_hi": T.DoubleType(),
-        "lng_lo": T.DoubleType(), "lng_hi": T.DoubleType(),
-        "verts": T.ArrayType(T.ArrayType(T.DoubleType())),
-        "cell_id": T.LongType(),
-        "max_cells": T.IntegerType(),
-    }
-    for c in REGION_COLS:
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast(types[c]))
-        else:
-            df = df.withColumn(c, F.col(c).cast(types[c]))
-    return df
+_REGION_TYPES = {
+    "kind": T.StringType(),
+    "lat": T.DoubleType(), "lng": T.DoubleType(), "radius_m": T.DoubleType(),
+    "lat_lo": T.DoubleType(), "lat_hi": T.DoubleType(),
+    "lng_lo": T.DoubleType(), "lng_hi": T.DoubleType(),
+    "verts": T.ArrayType(T.ArrayType(T.DoubleType())),
+    "cell_id": T.LongType(),
+    "max_cells": T.IntegerType(),
+}
+
+
+def _ensure_region_cols(df: DataFrame, max_cells: int | None = None) -> DataFrame:
+    """Cast the canonical region columns to their types, adding missing ones
+    as typed nulls; with ``max_cells``, null ``max_cells`` rows get that
+    default. One ``select``: the chain of 12 ``withColumn`` calls it
+    replaces cost about twice the driver time per query call."""
+
+    def region_col(c: str) -> F.Column:
+        col = (F.col(c) if c in df.columns else F.lit(None)).cast(_REGION_TYPES[c])
+        if c == "max_cells" and max_cells is not None:
+            col = F.coalesce(col, F.lit(max_cells))
+        return col.alias(c)
+
+    existing = [region_col(c) if c in _REGION_TYPES else F.col(c) for c in df.columns]
+    missing = [region_col(c) for c in REGION_COLS if c not in df.columns]
+    return df.select(*existing, *missing)
 
 
 def _bloom_opts(man: Manifest) -> dict[str, str]:
@@ -522,7 +531,7 @@ def build_index(
                 "polygon) or bare lat/lng point columns; got "
                 f"{src_df.columns}"
             )
-        src = _ensure_region_cols(src_df)
+        src = _ensure_region_cols(src_df, max_cells)
         # a bare (key, lat, lng) table is a point table: default null kind
         # to 'point' where coordinates exist instead of silently indexing
         # nothing (null kind used to fall into the region branch with
@@ -536,9 +545,6 @@ def build_index(
                     F.lit("point"),
                 ),
             ),
-        )
-        src = src.withColumn(
-            "max_cells", F.coalesce(F.col("max_cells"), F.lit(max_cells)).cast("int")
         )
         # the input may arrive as a handful of files (= partitions); the
         # covering UDF is the build's hot loop, so force full parallelism
@@ -787,13 +793,81 @@ def ensure_payload_cols(df: DataFrame) -> DataFrame:
     return df
 
 
+INDEX_TABLES = ("keys", "pairs", "postings")
+# Spark stores its own schema of every parquet file it writes in the footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _table_schema(spark: SparkSession, index_path: str, table: str) -> T.StructType | None:
+    """A table's Spark schema from one file footer, read on the driver: no
+    Spark job. Falls back to Spark's inference (one job) where no footer is
+    driver-readable, e.g. object-store paths; None if the table is absent."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    d = os.path.join(index_path, table)
+    if not os.path.isdir(d):
+        return None
+    files = [f for f in _list_stage_files(index_path, table) if "=" not in os.path.relpath(f, d)]
+    try:
+        meta = pq.read_metadata(files[0]).metadata or {}
+        return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    except (IndexError, KeyError, OSError, ValueError):
+        return spark.read.parquet(d).schema
+
+
+class IndexHandle:
+    """An opened index: its lattice bucket and the parquet schema of each
+    table — the reference's reader, opened once and probed many times
+    (RoaringGeoMapReader.cpp:8-34).
+
+    Only schemas are held, never a DataFrame or a file list: streamed
+    appends (rgm.streaming.stream_index_append) add files to ``pairs`` and
+    ``keys`` without a manifest commit, so every read lists the files
+    again. With an explicit schema that read runs no Spark job; inferring
+    the schema cost one job per table and call."""
+
+    def __init__(self, spark: SparkSession, index_path: str, commits: tuple, bucket: int):
+        self.spark = spark
+        self.path = index_path
+        self.commits = commits
+        self.bucket = bucket
+        self.schemas = {t: _table_schema(spark, index_path, t) for t in INDEX_TABLES}
+
+    def read(self, table: str) -> DataFrame:
+        reader = self.spark.read
+        if self.schemas[table] is not None:
+            reader = reader.schema(self.schemas[table])
+        return reader.parquet(os.path.join(self.path, table))
+
+
+_HANDLES: dict[str, IndexHandle] = {}
+
+
+def open_index(spark: SparkSession, index_path: str) -> IndexHandle:
+    """The index at ``index_path``, cached per session, path and manifest
+    commit. The cache key is every stage's ``committed_utc`` (plus the
+    bucket param): a rebuild at the same path keeps the ``snapshot_id`` but
+    recommits every stage, so the next call reopens."""
+    from .checkpoint import manifest_doc
+
+    doc = manifest_doc(index_path)
+    commits = tuple(sorted((s, e.get("committed_utc")) for s, e in doc.get("stages", {}).items()))
+    bucket = int(doc.get("params", {}).get("bucket", 3))
+    h = _HANDLES.get(index_path)
+    if h is None or h.spark is not spark or h.commits != commits or h.bucket != bucket:
+        h = _HANDLES[index_path] = IndexHandle(spark, index_path, commits, bucket)
+    return h
+
+
 def load_keys(spark: SparkSession, index_path: str, payload: bool = True) -> DataFrame:
     """Key table scan. ``payload=False`` prunes the payload-geometry columns
     (p_kind/p_radius_m/bboxes/p_verts) from the scan — point-refinement and
     refine=False queries never read them, and projecting them anyway widens
     every surviving row through the candidate join (the r2 contains_cap8
     regression suspect)."""
-    keys = spark.read.parquet(os.path.join(index_path, "keys"))
+    keys = open_index(spark, index_path).read("keys")
     cols = ["key_id", "key", "p_lat", "p_lng"]
     if payload:
         cols += [c for c in PAYLOAD_COLS if c in keys.columns]
@@ -801,8 +875,8 @@ def load_keys(spark: SparkSession, index_path: str, payload: bool = True) -> Dat
 
 
 def load_pairs(spark: SparkSession, index_path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_path, "pairs"))
+    return open_index(spark, index_path).read("pairs")
 
 
 def load_postings(spark: SparkSession, index_path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_path, "postings"))
+    return open_index(spark, index_path).read("postings")

@@ -33,14 +33,13 @@ from pyspark.sql import types as T
 
 from . import cellmath as cm
 from . import bitmap as bm
-from .index import PARENT3_EXPR, _ensure_region_cols, load_keys, load_pairs, load_postings
+from .index import PARENT3_EXPR, _ensure_region_cols, load_keys, open_index
 from .udfs import REGION_COLS, make_cover_udf, make_tile_udf, refine_udf
 
 
 def _cover_queries(queries: DataFrame, bucket: int, max_cells: int) -> DataFrame:
     """queries (query_id + region cols) -> + cells / ancs arrays."""
-    q = _ensure_region_cols(queries)
-    q = q.withColumn("max_cells", F.coalesce(F.col("max_cells"), F.lit(max_cells)).cast("int"))
+    q = _ensure_region_cols(queries, max_cells)
     cover_udf = make_cover_udf(bucket)
     return q.withColumn("qcov", cover_udf(*[F.col(c) for c in REGION_COLS]))
 
@@ -127,16 +126,18 @@ def plan_query_cells(
 ) -> tuple[DataFrame, list[int] | None]:
     """-> (q_cells(query_id, cell_id, is_anc, q_l3), prune prefixes or None).
 
-    Small query batches (the broadcast-join regime) are planned entirely
-    driver-side: the raw region rows are collected and the covering kernel
-    (rgm.udfs.compute_covers — the same code the executor UDF runs) executes
-    locally, so a search issues ZERO Spark jobs before the index join.
+    Query batches of up to SMALL_QUERY_ROWS rows (the broadcast-join
+    regime) are planned on the driver: the raw region rows are collected
+    (one Spark job) and the exploded cell frame is built in driver memory,
+    so the prune prefixes come back as a list. Below DRIVER_COVER_ROWS the
+    covering kernel (rgm.udfs.compute_covers — the same code the executor
+    UDF runs) also runs locally, so no further Spark job runs before the
+    index join; above it the kernel runs as one distributed pass
+    (_covers_distributed). Larger batches stay lazy and the prefixes are
+    None.
     """
     if collect_small:
-        q = _ensure_region_cols(queries)
-        q = q.withColumn(
-            "max_cells", F.coalesce(F.col("max_cells"), F.lit(max_cells)).cast("int")
-        )
+        q = _ensure_region_cols(queries, max_cells)
         rows = q.select("query_id", *REGION_COLS).limit(SMALL_QUERY_ROWS + 1).collect()
         if len(rows) <= SMALL_QUERY_ROWS:
             if not rows:
@@ -175,14 +176,11 @@ def plan_query_cells(
 
 def index_bucket(index_path: str, bucket: int | None) -> int:
     """The lattice bucket is an index property — read it from the manifest
-    so queries always quantize the same way the build did. Cached per
-    (path, mtime): the hot query loop re-read the JSON per call (r2 judge
-    finding on per-job fixed costs)."""
+    (through the cached index handle, rgm.index.open_index) so queries
+    always quantize the same way the build did."""
     if bucket is not None:
         return bucket
-    from .checkpoint import manifest_doc
-
-    return int(manifest_doc(index_path).get("params", {}).get("bucket", 3))
+    return open_index(SparkSession.active(), index_path).bucket
 
 
 def candidate_keys(
@@ -213,11 +211,12 @@ def candidate_keys(
     """
     if mode not in ("equi", "range"):
         raise ValueError(mode)
+    idx = open_index(spark, index_path)
     q_cells, prefixes = plan_query_cells(
-        spark, queries, index_bucket(index_path, bucket), max_cells
+        spark, queries, idx.bucket if bucket is None else bucket, max_cells
     )
 
-    pairs = load_pairs(spark, index_path)
+    pairs = idx.read("pairs")
     if prune:
         if prefixes is None:
             prefixes = [r["q_l3"] for r in q_cells.select("q_l3").distinct().collect()]
@@ -329,12 +328,21 @@ def count_keys(
     Postings exist for origin cells AND their lattice-ancestor rollups, so
     this is the exact same broadcast equi-join shape as ``search``: the
     query's origin cells match any posting row; the query's ancestor cells
-    match origin postings only."""
-    q_cells, prefixes = plan_query_cells(
-        spark, queries, index_bucket(index_path, bucket), max_cells
-    )
+    match origin postings only.
 
-    postings = load_postings(spark, index_path)
+    A batch planned on the driver (up to SMALL_QUERY_ROWS rows) finishes
+    its union on the driver too: the per-partition partial bitmaps are
+    collected and the result comes back as a local DataFrame, with no
+    shuffle and no second Python stage. Larger batches finish with a
+    distributed union after a shuffle by query_id. Either way a query
+    without candidates has no row."""
+    idx = open_index(spark, index_path)
+    q_cells, prefixes = plan_query_cells(
+        spark, queries, idx.bucket if bucket is None else bucket, max_cells
+    )
+    planned_on_driver = prefixes is not None
+
+    postings = idx.read("postings")
     if prune:
         if prefixes is None:
             prefixes = [r["q_l3"] for r in q_cells.select("q_l3").distinct().collect()]
@@ -360,6 +368,10 @@ def count_keys(
         ends = np.append(grp[1:], len(c)).astype(np.int64)
         return vals, grp.astype(np.int64), ends, uniq[c[grp]] if len(c) else []
 
+    def _counts(pdf):
+        _, starts, ends, qids = _union_groups(pdf)
+        return pd.DataFrame({"query_id": qids, "n_keys": ends - starts})
+
     def partial_union(it):
         # phase 1 — partition-local: collapse each scan partition's matched
         # posting rows to one partial bitmap per query (map-side combine;
@@ -382,19 +394,22 @@ def count_keys(
         pdf = pd.concat(chunks, ignore_index=True)
         if not len(pdf):
             return
-        _, starts, ends, qids = _union_groups(pdf)
-        yield pd.DataFrame({"query_id": qids, "n_keys": ends - starts})
+        yield _counts(pdf)
 
+    schema = "query_id string, n_keys long"
+    partials = matched.select("query_id", "bitmap").mapInPandas(
+        partial_union, "query_id string, bitmap binary"
+    )
+    if planned_on_driver:
+        pdf = partials.toPandas()
+        if not len(pdf):
+            return spark.createDataFrame([], schema)
+        return spark.createDataFrame(_counts(pdf), schema)
     # fixed fan-in for the final union: the partials are one row per
     # (scan partition, query), so a handful of reducers suffices at any
     # parallelism level — tying this to shuffle_partitions made the tiny
     # final stage slower the more cores the session had
-    return (
-        matched.select("query_id", "bitmap")
-        .mapInPandas(partial_union, "query_id string, bitmap binary")
-        .repartition(8, "query_id")
-        .mapInPandas(final_count, "query_id string, n_keys long")
-    )
+    return partials.repartition(8, "query_id").mapInPandas(final_count, schema)
 
 
 def _range_bounds_udf():
@@ -423,8 +438,7 @@ def tiles_for_regions(
 ) -> DataFrame:
     """Vector->raster: all level-``level`` tiles intersecting each region.
     Returns (query_id, tile_id) exploded."""
-    q = _ensure_region_cols(queries)
-    q = q.withColumn("max_cells", F.coalesce(F.col("max_cells"), F.lit(max_tiles)).cast("int"))
+    q = _ensure_region_cols(queries, max_tiles)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def tiles_udf(

@@ -62,15 +62,49 @@ def package_zip() -> str:
     return final
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on (what ``nproc`` prints)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def host_mem_mb() -> int | None:
+    """MemTotal from /proc/meminfo in MiB; None where there is none."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None
+
+
+def default_driver_memory() -> str:
+    """Half the host's RAM, between 1g and 48g (48g where MemTotal is
+    unknown): local mode runs every executor inside the driver JVM, and
+    the other half stays for its Python workers and the OS."""
+    mem_mb = host_mem_mb()
+    if mem_mb is None:
+        return "48g"
+    return f"{min(max(mem_mb // 2048, 1), 48)}g"
+
+
 def get_spark(
     app_name: str = "rgm",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Session with ``cpus`` local slots (default: $SPARK_GRAFT_CPUS, else
+    the host's CPUs) and ``driver_memory`` (default: half the host's RAM)."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus()))
+    if driver_memory is None:
+        driver_memory = default_driver_memory()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 32)
     builder = (

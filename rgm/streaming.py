@@ -72,10 +72,7 @@ def stream_index_append(
             next_id = (
                 spark.read.parquet(keys_dir).agg(F.max("key_id")).collect()[0][0] or 0
             ) + 1
-        src = _ensure_region_cols(batch_df)
-        src = src.withColumn(
-            "max_cells", F.coalesce(F.col("max_cells"), F.lit(max_cells)).cast("int")
-        )
+        src = _ensure_region_cols(batch_df, max_cells)
         # cache: the covering UDF output feeds the bucket-count job, the
         # pairs write, and the keys write — one UDF pass, not three
         covered = src.withColumn(

@@ -37,7 +37,18 @@ def _leg(stages: str) -> dict:
         env=env, capture_output=True, text=True, timeout=900,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    # the last stdout line is a compact summary a log tail can parse; the
+    # full record it names carries rows and build-stage seconds
+    last = out.stdout.strip().splitlines()[-1]
+    assert len(last.encode()) < 2000
+    summary = json.loads(last)
+    assert summary["host"]["nproc"] >= 1 and summary["driver_memory"]
+    sys.path.insert(0, ROOT)
+    from bench import read_record
+
+    record = read_record(out.stdout)
+    assert record["queries"] == summary["queries"]
+    return record
 
 
 def test_stage_filtered_legs_time_only_requested_and_reuse_state():

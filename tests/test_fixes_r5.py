@@ -615,7 +615,8 @@ def test_distributed_query_planner_matches_driver(spark, monkeypatch):
     component proportional to batch size, pinning query-stage pair
     efficiency at ~0.29 at every batch scale. plan_query_cells now runs the
     kernel via mapInPandas above DRIVER_COVER_ROWS; the exploded frame and
-    prune prefixes must be identical either way (same kernel, same cells)."""
+    prune prefixes must be identical either way (same kernel, same cells).
+    The batch mixes caps, rects and real 3-vertex [lat, lng] polygon rings."""
     import pandas as pd
 
     from rgm import query as rq
@@ -631,11 +632,11 @@ def test_distributed_query_planner_matches_driver(spark, monkeypatch):
         "cast(11 + id % 40 as double) as lat_hi",
         "cast(-50 + id % 100 as double) as lng_lo",
         "cast(-49 + id % 100 as double) as lng_hi",
-        """case when id % 3 = 2 then array(array(
-             cast(10 + id % 40 as double), cast(-50 + id % 100 as double),
-             cast(10.8 + id % 40 as double), cast(-49.6 + id % 100 as double),
-             cast(10.4 + id % 40 as double), cast(-50.8 + id % 100 as double)
-           )) end as verts""",
+        """case when id % 3 = 2 then array(
+             array(cast(10 + id % 40 as double), cast(-50 + id % 100 as double)),
+             array(cast(10.8 + id % 40 as double), cast(-49.6 + id % 100 as double)),
+             array(cast(10.4 + id % 40 as double), cast(-50.8 + id % 100 as double))
+           ) end as verts""",
         "cast(null as long) as cell_id",
         "cast(30 as int) as max_cells",
     )
@@ -654,4 +655,8 @@ def test_distributed_query_planner_matches_driver(spark, monkeypatch):
     dist, dist_pref = plan(threshold=1)  # mapInPandas kernel
     assert drv_pref == dist_pref and len(drv_pref) > 0
     assert len(drv) > 0
+    # a ~1 degree triangle covers several cells (a degenerate 1-vertex
+    # ring covered one)
+    origin = drv.loc[~drv["is_anc"]].groupby("query_id").size()
+    assert all(origin.get(f"q{i}", 0) > 1 for i in range(n) if i % 3 == 2)
     pd.testing.assert_frame_equal(drv, dist)

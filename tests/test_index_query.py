@@ -405,3 +405,121 @@ def test_chunked_covers_resume(spark, tmp_path):
     assert os.path.getmtime(chunk_dirs[0]) == mtimes[chunk_dirs[0]]
     assert os.path.getmtime(chunk_dirs[2]) == mtimes[chunk_dirs[2]]
     assert keyset(single) == keyset(chunked)
+
+
+_CAPS = "query_id string, kind string, lat double, lng double, radius_m double"
+_POINTS = "key string, kind string, lat double, lng double"
+
+
+def _counts(df) -> dict:
+    return {r["query_id"]: r["n_keys"] for r in df.collect()}
+
+
+def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeypatch):
+    """A batch planned on the driver finishes its bitmap union there and
+    returns a local result; above SMALL_QUERY_ROWS the union runs
+    distributed after a shuffle. The same batch forced through both finals
+    gives the same (query_id, n_keys), equal to the distinct cell-level
+    candidates of search(refine=False); a query without candidates has no
+    row either way."""
+    rng = np.random.default_rng(17)
+    n = 400
+    lat = 37.0 + rng.uniform(-0.5, 0.5, n)
+    lng = -122.0 + rng.uniform(-0.5, 0.5, n)
+    pts = spark.createDataFrame(
+        [(f"k{i}", "point", float(lat[i]), float(lng[i])) for i in range(n)], _POINTS
+    )
+    out = str(tmp_path / "idx")
+    ridx.build_index(spark, pts, "key", out, bucket=3, n_buckets=4)
+    rows = [(f"q{i}", "cap", float(lat[i]), float(lng[i]), 2_000.0 + 1_500.0 * i) for i in range(12)]
+    rows.append(("miss", "cap", -45.0, 100.0, 1_000.0))
+    q = spark.createDataFrame(rows, _CAPS)
+
+    cands = {
+        r["query_id"]: r["n"]
+        for r in rq.search(spark, out, q, refine=False)
+        .groupBy("query_id").agg(F.countDistinct("key_id").alias("n")).collect()
+    }
+    on_driver = rq.count_keys(spark, out, q)
+    assert on_driver._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
+    driver = _counts(on_driver)
+
+    monkeypatch.setattr(rq, "SMALL_QUERY_ROWS", len(rows) - 1)
+    distributed_df = rq.count_keys(spark, out, q)
+    assert "MapInPandas" in distributed_df._jdf.queryExecution().analyzed().toString()
+    distributed = _counts(distributed_df)
+
+    assert driver == distributed == cands
+    assert len(driver) == 12 and "miss" not in driver
+
+
+def test_count_keys_empty_batch_is_empty(spark, small_index):
+    q = spark.createDataFrame([], _CAPS)
+    res = rq.count_keys(spark, small_index, q)
+    assert res.collect() == [] and res.columns == ["query_id", "n_keys"]
+
+
+def test_open_index_schemas_match_inference(spark, small_index):
+    """The handle's footer-read schemas are what Spark's own inference
+    gives, so explicit-schema reads return the same frames."""
+    h = ridx.open_index(spark, small_index)
+    assert h.bucket == 3
+    for table in ridx.INDEX_TABLES:
+        inferred = spark.read.parquet(f"{small_index}/{table}").schema
+        assert h.read(table).schema == inferred
+        assert h.read(table).count() == spark.read.parquet(f"{small_index}/{table}").count()
+    assert ridx.open_index(spark, small_index) is h  # cached
+
+
+def test_index_handle_follows_appends_and_rebuilds(spark, tmp_path, monkeypatch):
+    """The handle caches schemas only. Streamed appends add pairs/keys files
+    without a manifest commit: the same handle stays open and the next
+    search lists and sees the new files. refresh_postings commits, so the
+    next count_keys reopens and counts the streamed keys. A rebuild at the
+    same path with a different bucket is picked up by the next query."""
+    import os
+
+    from rgm import streaming as rstream
+
+    base = [(f"b{i}", "point", 37.0 + 0.01 * i, -122.0) for i in range(20)]
+    out = str(tmp_path / "idx")
+    ridx.build_index(spark, spark.createDataFrame(base, _POINTS), "key", out, bucket=3, n_buckets=2)
+    q = spark.createDataFrame([("all", "cap", 37.1, -122.0, 50_000.0)], _CAPS)
+
+    def keys():
+        return {r["key"] for r in rq.search(spark, out, q).collect()}
+
+    h = ridx.open_index(spark, out)
+    assert keys() == {k for k, *_ in base}
+    assert _counts(rq.count_keys(spark, out, q)) == {"all": 20}
+
+    src = str(tmp_path / "incoming")
+    os.makedirs(src)
+    new = spark.createDataFrame(
+        [(f"s{i}", "point", 37.05 + 0.01 * i, -122.05) for i in range(5)], _POINTS
+    )
+    new.write.parquet(src, mode="overwrite")
+    stream = spark.readStream.schema(new.schema).parquet(src)
+    rstream.stream_index_append(spark, stream, "key", out, str(tmp_path / "ckpt")).awaitTermination(120)
+
+    assert ridx.open_index(spark, out) is h
+    assert keys() == {k for k, *_ in base} | {f"s{i}" for i in range(5)}
+    ridx.refresh_postings(spark, out, n_buckets=2)
+    assert ridx.open_index(spark, out) is not h
+    assert _counts(rq.count_keys(spark, out, q)) == {"all": 25}
+
+    seen = []
+    plan = rq.plan_query_cells
+
+    def spy(spark_, queries, bucket, max_cells, **kw):
+        seen.append(bucket)
+        return plan(spark_, queries, bucket, max_cells, **kw)
+
+    monkeypatch.setattr(rq, "plan_query_cells", spy)
+    ridx.build_index(
+        spark, spark.createDataFrame(base, _POINTS), "key", out, bucket=1, n_buckets=2, resume=False
+    )
+    assert keys() == {k for k, *_ in base}
+    assert _counts(rq.count_keys(spark, out, q)) == {"all": 20}
+    assert seen == [1, 1]
+    assert ridx.open_index(spark, out).bucket == 1

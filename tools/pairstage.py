@@ -90,8 +90,9 @@ def run_leg(sf_dir: str, cpus: int, stage: str) -> tuple[float, dict]:
             f"bench leg failed (stage={stage} cpus={cpus} rc={out.returncode}):\n"
             + out.stderr[-2000:]
         )
-    line = out.stdout.strip().splitlines()[-1]
-    rec = json.loads(line)
+    from bench import read_record
+
+    rec = read_record(out.stdout)
     return rec["queries"][stage], rec.get("build_stages", {}).get(stage, {})
 
 

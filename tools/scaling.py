@@ -43,8 +43,9 @@ def run(sf_dir: str, cpus: int) -> dict:
         [sys.executable, os.path.join(ROOT, "bench.py")],
         env=env, capture_output=True, text=True, timeout=3600,
     )
-    line = out.stdout.strip().splitlines()[-1]
-    return json.loads(line)
+    from bench import read_record
+
+    return read_record(out.stdout)
 
 
 def raw_kernel_ceiling(n_low: int, n_high: int) -> float:
