@@ -73,9 +73,6 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from rgm.session import host_cpus, host_mem_mb
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus()))
     # SPARK_GRAFT_STAGES=a,b: time ONLY those stages (tools/pairstage.py
     # runs one stage per subprocess so each stage's low/high legs share a
     # host window). State a requested stage needs (committed indexes, the
@@ -88,9 +85,11 @@ def main() -> None:
     from rgm import benchqueries as bq
     from rgm import index as ridx
     from rgm import query as rq
-    from rgm.session import get_spark
+    from rgm.session import get_spark, host_cpus, host_mem_mb
 
-    spark = get_spark(app_name="rgm-bench", cpus=cpus)
+    # slots: $SPARK_GRAFT_CPUS, else the host's CPUs (get_spark's default)
+    spark = get_spark(app_name="rgm-bench")
+    cpus = spark.sparkContext.defaultParallelism
     driver_memory = spark.sparkContext.getConf().get("spark.driver.memory")
 
     if want is not None:

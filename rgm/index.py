@@ -794,27 +794,6 @@ def ensure_payload_cols(df: DataFrame) -> DataFrame:
 
 
 INDEX_TABLES = ("keys", "pairs", "postings")
-# Spark stores its own schema of every parquet file it writes in the footer
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _table_schema(spark: SparkSession, index_path: str, table: str) -> T.StructType | None:
-    """A table's Spark schema from one file footer, read on the driver: no
-    Spark job. Falls back to Spark's inference (one job) where no footer is
-    driver-readable, e.g. object-store paths; None if the table is absent."""
-    import json
-
-    import pyarrow.parquet as pq
-
-    d = os.path.join(index_path, table)
-    if not os.path.isdir(d):
-        return None
-    files = [f for f in _list_stage_files(index_path, table) if "=" not in os.path.relpath(f, d)]
-    try:
-        meta = pq.read_metadata(files[0]).metadata or {}
-        return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
-    except (IndexError, KeyError, OSError, ValueError):
-        return spark.read.parquet(d).schema
 
 
 class IndexHandle:
@@ -826,18 +805,21 @@ class IndexHandle:
     appends (rgm.streaming.stream_index_append) add files to ``pairs`` and
     ``keys`` without a manifest commit, so every read lists the files
     again. With an explicit schema that read runs no Spark job; inferring
-    the schema cost one job per table and call."""
+    the schema costs one job per table, so it runs once per opened commit.
+    A table missing from a local index (or any table on a path the driver
+    cannot list) has no cached schema and is read with inference."""
 
     def __init__(self, spark: SparkSession, index_path: str, commits: tuple, bucket: int):
         self.spark = spark
         self.path = index_path
         self.commits = commits
         self.bucket = bucket
-        self.schemas = {t: _table_schema(spark, index_path, t) for t in INDEX_TABLES}
+        tables = {t: os.path.join(index_path, t) for t in INDEX_TABLES}
+        self.schemas = {t: spark.read.parquet(d).schema for t, d in tables.items() if os.path.isdir(d)}
 
     def read(self, table: str) -> DataFrame:
         reader = self.spark.read
-        if self.schemas[table] is not None:
+        if table in self.schemas:
             reader = reader.schema(self.schemas[table])
         return reader.parquet(os.path.join(self.path, table))
 

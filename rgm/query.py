@@ -24,6 +24,7 @@ brute-force oracle (reference C1 north_star semantics).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -59,6 +60,20 @@ SMALL_QUERY_ROWS = 100_000
 # the driver; below it, one ~2s Spark job floor would cost more than the
 # serial kernel saves.
 DRIVER_COVER_ROWS = int(os.environ.get("RGM_DRIVER_COVER_ROWS", "4096"))
+
+# count_keys batches up to this size finish their bitmap union on the
+# driver. Timed against the distributed final on the same plan (25k-point
+# clustered index, local[4], 4 vCPU, 0.5-3 km and 5-30 km caps): as fast
+# or faster at 4,200 and 32,768 caps, 8-12% slower at 100,000 caps (driver
+# memory equal either way: planning the batch dominates it).
+DRIVER_FINAL_ROWS = 32_768
+
+# count_keys' driver-side final unions its collected partial bitmaps in
+# query-disjoint chunks of about this many bitmap bytes, a few chunks at a
+# time on threads (the numpy decode and sort release the GIL). On 32k wide
+# caps (35 MB of partials, 4 vCPU) one serial union took 2.0 s and 0.96 GB
+# of RSS; 16 chunks on 4 threads took 0.8 s and 0.44 GB.
+_FINAL_CHUNK_BYTES = 2 << 20
 
 _Q_CELLS_SCHEMA = "query_id string, cell_id long, is_anc boolean, q_l3 long"
 _NUM_REGION_COLS = ("lat", "lng", "radius_m", "lat_lo", "lat_hi", "lng_lo", "lng_hi")
@@ -136,13 +151,26 @@ def plan_query_cells(
     (_covers_distributed). Larger batches stay lazy and the prefixes are
     None.
     """
+    q_cells, prefixes, _ = _plan_query_cells(spark, queries, bucket, max_cells, collect_small)
+    return q_cells, prefixes
+
+
+def _plan_query_cells(
+    spark: SparkSession,
+    queries: DataFrame,
+    bucket: int,
+    max_cells: int,
+    collect_small: bool = True,
+) -> tuple[DataFrame, list[int] | None, int | None]:
+    """plan_query_cells, plus the row count of a batch planned on the
+    driver (None for a lazy plan)."""
     if collect_small:
         q = _ensure_region_cols(queries, max_cells)
         rows = q.select("query_id", *REGION_COLS).limit(SMALL_QUERY_ROWS + 1).collect()
         if len(rows) <= SMALL_QUERY_ROWS:
             if not rows:
                 empty = spark.createDataFrame([], _Q_CELLS_SCHEMA)
-                return empty, []
+                return empty, [], 0
             if len(rows) > DRIVER_COVER_ROWS:
                 out = _covers_distributed(spark, q, bucket)
             else:
@@ -158,7 +186,7 @@ def plan_query_cells(
                 )
                 out = _explode_covers(pdf["query_id"].to_numpy(), cov)
             q_cells = spark.createDataFrame(out, schema=_Q_CELLS_SCHEMA)
-            return q_cells, sorted(int(x) for x in pd.unique(out["q_l3"]))
+            return q_cells, sorted(int(x) for x in pd.unique(out["q_l3"])), len(rows)
     covered = _cover_queries(queries, bucket, max_cells)
     q_origin = covered.select(
         "query_id", F.explode("qcov.cells").alias("cell_id"), F.lit(False).alias("is_anc")
@@ -171,7 +199,7 @@ def plan_query_cells(
         F.lit(True).alias("is_anc"),
     )
     q_cells = q_origin.unionByName(q_anc).withColumn("q_l3", F.expr(PARENT3_EXPR))
-    return q_cells, None
+    return q_cells, None, None
 
 
 def index_bucket(index_path: str, bucket: int | None) -> int:
@@ -330,17 +358,17 @@ def count_keys(
     query's origin cells match any posting row; the query's ancestor cells
     match origin postings only.
 
-    A batch planned on the driver (up to SMALL_QUERY_ROWS rows) finishes
-    its union on the driver too: the per-partition partial bitmaps are
-    collected and the result comes back as a local DataFrame, with no
-    shuffle and no second Python stage. Larger batches finish with a
-    distributed union after a shuffle by query_id. Either way a query
-    without candidates has no row."""
+    A batch of up to DRIVER_FINAL_ROWS rows (planned on the driver)
+    finishes its union on the driver too: the per-partition partial
+    bitmaps are collected, unioned in query-disjoint chunks of about
+    _FINAL_CHUNK_BYTES on up to one thread per task slot, and the result
+    comes back as a local DataFrame, with no shuffle and no second Python
+    stage. Larger batches finish with a distributed union after a shuffle
+    by query_id. Either way a query without candidates has no row."""
     idx = open_index(spark, index_path)
-    q_cells, prefixes = plan_query_cells(
+    q_cells, prefixes, n_rows = _plan_query_cells(
         spark, queries, idx.bucket if bucket is None else bucket, max_cells
     )
-    planned_on_driver = prefixes is not None
 
     postings = idx.read("postings")
     if prune:
@@ -355,18 +383,18 @@ def count_keys(
     def _union_groups(pdf):
         """(sorted-unique values, group starts/ends, per-group query_id)
         for all of a partition's (query_id, bitmap) rows — one vectorized
-        decode_many + lexsort, no per-query or per-blob Python (r5: the
-        groupby/union_many loop here was the count path's CPU sink)."""
+        decode_many, no per-query or per-blob Python (r5: the
+        groupby/union_many loop here was the count path's CPU sink). Each
+        uint32 value is packed under its query's code into one int64, so
+        a single-key np.unique sorts and dedups: a two-key lexsort of the
+        17M (query, key) values of 32k wide caps took 2.3x as long."""
         vals, rows = bm.decode_many(pdf["bitmap"].to_numpy())
         codes, uniq = pd.factorize(pdf["query_id"], sort=False)
-        c = codes[rows]
-        order = np.lexsort((vals, c))
-        c, vals = c[order], vals[order]
-        keep = np.concatenate([[True], (c[1:] != c[:-1]) | (vals[1:] != vals[:-1])]) if len(c) else np.empty(0, bool)
-        c, vals = c[keep], vals[keep]
-        grp = np.concatenate([[0], np.nonzero(c[1:] != c[:-1])[0] + 1]) if len(c) else np.empty(0, np.int64)
+        packed = np.unique((codes[rows].astype(np.int64) << 32) | vals.astype(np.int64))
+        c = packed >> 32
+        grp = np.flatnonzero(np.r_[True, c[1:] != c[:-1]]) if len(c) else np.empty(0, np.int64)
         ends = np.append(grp[1:], len(c)).astype(np.int64)
-        return vals, grp.astype(np.int64), ends, uniq[c[grp]] if len(c) else []
+        return (packed & 0xFFFFFFFF).astype(np.uint32), grp, ends, uniq[c[grp]] if len(c) else []
 
     def _counts(pdf):
         _, starts, ends, qids = _union_groups(pdf)
@@ -400,11 +428,15 @@ def count_keys(
     partials = matched.select("query_id", "bitmap").mapInPandas(
         partial_union, "query_id string, bitmap binary"
     )
-    if planned_on_driver:
+    if n_rows is not None and n_rows <= DRIVER_FINAL_ROWS:
         pdf = partials.toPandas()
-        if not len(pdf):
+        codes, uniq = pd.factorize(pdf["query_id"], sort=False)
+        n = min(len(uniq), 1 + int(pdf["bitmap"].map(len).sum()) // _FINAL_CHUNK_BYTES)
+        with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+            parts = list(pool.map(_counts, (pdf[codes % n == i] for i in range(n))))
+        if not parts:
             return spark.createDataFrame([], schema)
-        return spark.createDataFrame(_counts(pdf), schema)
+        return spark.createDataFrame(pd.concat(parts, ignore_index=True), schema)
     # fixed fan-in for the final union: the partials are one row per
     # (scan partition, query), so a handful of reducers suffices at any
     # parallelism level — tying this to shuffle_partitions made the tiny

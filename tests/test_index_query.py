@@ -416,12 +416,13 @@ def _counts(df) -> dict:
 
 
 def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeypatch):
-    """A batch planned on the driver finishes its bitmap union there and
-    returns a local result; above SMALL_QUERY_ROWS the union runs
-    distributed after a shuffle. The same batch forced through both finals
-    gives the same (query_id, n_keys), equal to the distinct cell-level
-    candidates of search(refine=False); a query without candidates has no
-    row either way."""
+    """A batch of up to DRIVER_FINAL_ROWS finishes its bitmap union on the
+    driver, in one or many query-disjoint chunks, and returns a local
+    result; above it (planned on the driver or, above SMALL_QUERY_ROWS,
+    lazily) the union runs distributed after a shuffle. The same
+    batch forced through every final gives the same (query_id, n_keys),
+    equal to the distinct cell-level candidates of search(refine=False); a
+    query without candidates has no row either way."""
     rng = np.random.default_rng(17)
     n = 400
     lat = 37.0 + rng.uniform(-0.5, 0.5, n)
@@ -443,13 +444,17 @@ def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeyp
     on_driver = rq.count_keys(spark, out, q)
     assert on_driver._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
     driver = _counts(on_driver)
+    monkeypatch.setattr(rq, "_FINAL_CHUNK_BYTES", 64)  # a chunk per query or two
+    chunked = _counts(rq.count_keys(spark, out, q))
 
-    monkeypatch.setattr(rq, "SMALL_QUERY_ROWS", len(rows) - 1)
+    monkeypatch.setattr(rq, "DRIVER_FINAL_ROWS", len(rows) - 1)
     distributed_df = rq.count_keys(spark, out, q)
     assert "MapInPandas" in distributed_df._jdf.queryExecution().analyzed().toString()
     distributed = _counts(distributed_df)
+    monkeypatch.setattr(rq, "SMALL_QUERY_ROWS", len(rows) - 1)  # lazy plan too
+    lazy = _counts(rq.count_keys(spark, out, q))
 
-    assert driver == distributed == cands
+    assert driver == chunked == distributed == lazy == cands
     assert len(driver) == 12 and "miss" not in driver
 
 
@@ -460,8 +465,8 @@ def test_count_keys_empty_batch_is_empty(spark, small_index):
 
 
 def test_open_index_schemas_match_inference(spark, small_index):
-    """The handle's footer-read schemas are what Spark's own inference
-    gives, so explicit-schema reads return the same frames."""
+    """The handle infers each table's schema once; explicit-schema reads
+    through it return the same frames as inferring reads."""
     h = ridx.open_index(spark, small_index)
     assert h.bucket == 3
     for table in ridx.INDEX_TABLES:
@@ -509,13 +514,13 @@ def test_index_handle_follows_appends_and_rebuilds(spark, tmp_path, monkeypatch)
     assert _counts(rq.count_keys(spark, out, q)) == {"all": 25}
 
     seen = []
-    plan = rq.plan_query_cells
+    plan = rq._plan_query_cells
 
-    def spy(spark_, queries, bucket, max_cells, **kw):
+    def spy(spark_, queries, bucket, max_cells, *args):
         seen.append(bucket)
-        return plan(spark_, queries, bucket, max_cells, **kw)
+        return plan(spark_, queries, bucket, max_cells, *args)
 
-    monkeypatch.setattr(rq, "plan_query_cells", spy)
+    monkeypatch.setattr(rq, "_plan_query_cells", spy)
     ridx.build_index(
         spark, spark.createDataFrame(base, _POINTS), "key", out, bucket=1, n_buckets=2, resume=False
     )
