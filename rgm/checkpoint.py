@@ -142,6 +142,10 @@ class Manifest:
         _DOC_CACHE.pop(self.path, None)
 
 
+class LeaseLost(RuntimeError):
+    """A writer lease lapsed while its holder still needed it."""
+
+
 class WriterLease:
     """Advisory single-writer lease over an index root, generation-fenced:
     the holder owns ``_writer.lock.g<N>`` where N only ever increases.
@@ -164,9 +168,9 @@ class WriterLease:
     unlink- or rename-steal protocols: a stealer acting on a stale
     "expired" read deletes the lock a NEW holder just created). A holder
     whose TTL lapses before renew() may lose the lease — the standard TTL
-    contract; crashed holders self-heal the same way. A torn lock file
-    (creator died between create and write) expires by file mtime + this
-    waiter's ttl_s. Acquisition beyond ``timeout_s`` raises TimeoutError
+    contract, and renew() then raises LeaseLost; crashed holders self-heal
+    the same way. A torn lock file (creator died between create and write)
+    expires by file mtime + this waiter's ttl_s. Acquisition beyond ``timeout_s`` raises TimeoutError
     rather than deadlocking a maintenance loop.
 
     This is the standard lock-file-over-shared-storage posture (works on
@@ -177,6 +181,7 @@ class WriterLease:
         self.root = root
         self.base = os.path.join(root, "_writer.lock")
         self.path: str | None = None  # the held generation file
+        self.expires_utc = 0.0  # of the held generation, as last written
         self.ttl_s = float(ttl_s)
         self.timeout_s = float(timeout_s)
         self._held = False
@@ -231,11 +236,9 @@ class WriterLease:
                 fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
             except FileExistsError:
                 continue  # lost the generation-bump race: re-list
+            expires = time.time() + self.ttl_s
             with os.fdopen(fd, "w") as f:
-                json.dump(
-                    {"owner": f"{os.getpid()}", "expires_utc": time.time() + self.ttl_s},
-                    f,
-                )
+                json.dump({"owner": f"{os.getpid()}", "expires_utc": expires}, f)
             after = self._gens()
             if after and after[-1][0] > target:
                 # fencing: a higher generation appeared (created off an
@@ -252,19 +255,30 @@ class WriterLease:
                     except FileNotFoundError:
                         pass
             self.path = path
+            self.expires_utc = expires
             self._held = True
             return self
 
     def renew(self) -> None:
-        """Extend the TTL (long compactions renew between phases)."""
+        """Extend the TTL; long lease-held sections call it between steps
+        (``_compact_stage`` per copied file and before its commit,
+        ``stream_index_append`` between its pairs and keys appends).
+
+        Raises LeaseLost, and stops holding, when the TTL already lapsed or
+        a newer generation exists: a waiter may have taken the lease, so
+        the caller must not go on to write or commit."""
         if not self._held:
             raise RuntimeError("renew() without the lease held")
+        gens = self._gens()
+        if time.time() >= self.expires_utc or not gens or gens[-1][1] != self.path:
+            self._held = False
+            raise LeaseLost(f"writer lease lapsed before renew(): {self.path}")
         tmp = self.path + f".renew-{os.getpid()}"
+        expires = time.time() + self.ttl_s
         with open(tmp, "w") as f:
-            json.dump(
-                {"owner": f"{os.getpid()}", "expires_utc": time.time() + self.ttl_s}, f
-            )
+            json.dump({"owner": f"{os.getpid()}", "expires_utc": expires}, f)
         os.replace(tmp, self.path)
+        self.expires_utc = expires
 
     def release(self) -> None:
         if self._held:

@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from . import bitmap as bm
 from . import cellmath as cm
-from .checkpoint import Manifest
+from .checkpoint import LeaseLost, Manifest
 from .udfs import REGION_COLS, make_cover_udf
 
 # JVM-side cell bit-math (two's-complement int64-safe; SURVEY §7.2):
@@ -321,7 +321,10 @@ def _compact_stage(
     residual window (a file landing between the final re-list and the
     rename pair, dying with the trashed old dir) is CLOSED, not just
     narrowed — asserted by test_compaction_vs_live_appender_lease with
-    real thread interleaving.
+    real thread interleaving. The lease is renewed after each copied file
+    and before the commit; if it lapsed first (a waiter may hold it now),
+    renew() raises LeaseLost and the compaction drops its tmp dir and
+    fails without committing.
 
     ``_post_write_hook`` is a test seam: invoked after the compacted tmp
     dir is written and before the lease-guarded merge re-list, letting
@@ -346,12 +349,18 @@ def _compact_stage(
     writer.parquet(tmp)
     if _post_write_hook is not None:
         _post_write_hook()
-    with man.lease():
+    with man.lease() as lease:
         seen = set(snap)
         appended = [f for f in _list_stage_files(index_path, stage) if f not in seen]
-        for i, f in enumerate(appended):
-            shutil.copy2(f, os.path.join(tmp, f"appended-{i:05d}-{os.path.basename(f)}"))
-        n = _parquet_rows(tmp, spark)
+        try:
+            for i, f in enumerate(appended):
+                shutil.copy2(f, os.path.join(tmp, f"appended-{i:05d}-{os.path.basename(f)}"))
+                lease.renew()
+            n = _parquet_rows(tmp, spark)
+            lease.renew()
+        except LeaseLost:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         man.commit_stage(
             stage,
             tmp,

@@ -14,7 +14,9 @@ query side is a covering of the (small) query batch, so Catalyst broadcasts
 it; the big pairs table is never shuffled. A coarse ``cell_l3`` IN-list
 derived from the query covering is pushed into the Parquet scan for
 row-group pruning — the Spark analog of the reference's SuRF prefilter +
-block-max index (A7/A8/A12).
+block-max index (A7/A8/A12). ``count_keys`` of a driver-planned batch
+does the same match without a join: the postings scan's mapInPandas looks
+each posting row's cell up in the covering it carries in its closure.
 
 Cell-level matches are a sound superset; ``refine=True`` applies the exact
 geometry predicate (rgm.geo) to survivors, making results equal to the
@@ -46,9 +48,10 @@ def _cover_queries(queries: DataFrame, bucket: int, max_cells: int) -> DataFrame
 
 
 # query batches up to this size are planned driver-side: the covering runs
-# as one small job, the exploded cell list becomes a local DataFrame and the
-# level-3 prune prefixes are computed with numpy — a broadcast join needs
-# the query side in driver memory anyway
+# as one small job and the exploded cell list and the level-3 prune
+# prefixes are built with numpy in driver memory (a broadcast join needs
+# the query side there anyway). count_keys probes the cell list inside its
+# postings scan; search makes it a local DataFrame for the broadcast join
 SMALL_QUERY_ROWS = 100_000
 
 # ...but the covering KERNEL only runs on the driver below this row count.
@@ -76,6 +79,7 @@ DRIVER_FINAL_ROWS = 32_768
 _FINAL_CHUNK_BYTES = 2 << 20
 
 _Q_CELLS_SCHEMA = "query_id string, cell_id long, is_anc boolean, q_l3 long"
+_COUNT_SCHEMA = "query_id string, n_keys long"
 _NUM_REGION_COLS = ("lat", "lng", "radius_m", "lat_lo", "lat_hi", "lng_lo", "lng_hi")
 
 
@@ -109,8 +113,8 @@ def _covers_distributed(
     """Run the covering kernel over the query batch as ONE mapInPandas pass
     at default parallelism and collect only the exploded cell frame. The
     query batch is still broadcast-regime small (<= SMALL_QUERY_ROWS), so
-    the result lands in driver memory exactly as the all-driver path's —
-    downstream planning (prefix list, local q_cells relation) is unchanged."""
+    the result lands in driver memory exactly as the all-driver path's and
+    everything downstream of the planner is the same."""
     from .udfs import compute_covers
 
     n_parts = max(int(spark.sparkContext.defaultParallelism), 1)
@@ -141,52 +145,59 @@ def plan_query_cells(
 ) -> tuple[DataFrame, list[int] | None]:
     """-> (q_cells(query_id, cell_id, is_anc, q_l3), prune prefixes or None).
 
-    Query batches of up to SMALL_QUERY_ROWS rows (the broadcast-join
-    regime) are planned on the driver: the raw region rows are collected
-    (one Spark job) and the exploded cell frame is built in driver memory,
-    so the prune prefixes come back as a list. Below DRIVER_COVER_ROWS the
-    covering kernel (rgm.udfs.compute_covers — the same code the executor
-    UDF runs) also runs locally, so no further Spark job runs before the
-    index join; above it the kernel runs as one distributed pass
-    (_covers_distributed). Larger batches stay lazy and the prefixes are
-    None.
-    """
-    q_cells, prefixes, _ = _plan_query_cells(spark, queries, bucket, max_cells, collect_small)
-    return q_cells, prefixes
+    A batch of up to SMALL_QUERY_ROWS rows is planned on the driver
+    (_plan_query_cells): its exploded cell frame becomes a local relation
+    for the broadcast join and the prune prefixes come back as a list.
+    Larger batches, or collect_small=False, stay lazy and the prefixes are
+    None."""
+    planned = _plan_query_cells(spark, queries, bucket, max_cells) if collect_small else None
+    if planned is None:
+        return _lazy_query_cells(queries, bucket, max_cells), None
+    out = planned[0]
+    if not len(out):
+        return spark.createDataFrame([], _Q_CELLS_SCHEMA), []
+    return spark.createDataFrame(out, schema=_Q_CELLS_SCHEMA), _prefixes(out)
 
 
 def _plan_query_cells(
-    spark: SparkSession,
-    queries: DataFrame,
-    bucket: int,
-    max_cells: int,
-    collect_small: bool = True,
-) -> tuple[DataFrame, list[int] | None, int | None]:
-    """plan_query_cells, plus the row count of a batch planned on the
-    driver (None for a lazy plan)."""
-    if collect_small:
-        q = _ensure_region_cols(queries, max_cells)
-        rows = q.select("query_id", *REGION_COLS).limit(SMALL_QUERY_ROWS + 1).collect()
-        if len(rows) <= SMALL_QUERY_ROWS:
-            if not rows:
-                empty = spark.createDataFrame([], _Q_CELLS_SCHEMA)
-                return empty, [], 0
-            if len(rows) > DRIVER_COVER_ROWS:
-                out = _covers_distributed(spark, q, bucket)
-            else:
-                from .udfs import compute_covers
+    spark: SparkSession, queries: DataFrame, bucket: int, max_cells: int
+) -> tuple[pd.DataFrame, int] | None:
+    """(exploded cell frame (query_id, cell_id, is_anc, q_l3), row count)
+    of a batch of up to SMALL_QUERY_ROWS rows, built in driver memory;
+    None for a larger batch.
 
-                pdf = pd.DataFrame([r.asDict() for r in rows])
-                for c in _NUM_REGION_COLS:
-                    pdf[c] = pd.to_numeric(pdf[c], errors="coerce")
-                cov = compute_covers(
-                    pdf["kind"], pdf["lat"], pdf["lng"], pdf["radius_m"],
-                    pdf["lat_lo"], pdf["lat_hi"], pdf["lng_lo"], pdf["lng_hi"],
-                    pdf["verts"], pdf["cell_id"], pdf["max_cells"], bucket,
-                )
-                out = _explode_covers(pdf["query_id"].to_numpy(), cov)
-            q_cells = spark.createDataFrame(out, schema=_Q_CELLS_SCHEMA)
-            return q_cells, sorted(int(x) for x in pd.unique(out["q_l3"])), len(rows)
+    The raw region rows are collected (one Spark job). Below
+    DRIVER_COVER_ROWS the covering kernel (rgm.udfs.compute_covers — the
+    same code the executor UDF runs) also runs here, so no further Spark
+    job runs before the index is read; above it the kernel runs as one
+    distributed pass (_covers_distributed)."""
+    q = _ensure_region_cols(queries, max_cells)
+    rows = q.select("query_id", *REGION_COLS).limit(SMALL_QUERY_ROWS + 1).collect()
+    if len(rows) > SMALL_QUERY_ROWS:
+        return None
+    if not rows:
+        return _explode_covers(np.empty(0, object), pd.DataFrame({"cells": [], "ancs": []})), 0
+    if len(rows) > DRIVER_COVER_ROWS:
+        return _covers_distributed(spark, q, bucket), len(rows)
+    from .udfs import compute_covers
+
+    pdf = pd.DataFrame([r.asDict() for r in rows])
+    for c in _NUM_REGION_COLS:
+        pdf[c] = pd.to_numeric(pdf[c], errors="coerce")
+    cov = compute_covers(
+        pdf["kind"], pdf["lat"], pdf["lng"], pdf["radius_m"],
+        pdf["lat_lo"], pdf["lat_hi"], pdf["lng_lo"], pdf["lng_hi"],
+        pdf["verts"], pdf["cell_id"], pdf["max_cells"], bucket,
+    )
+    return _explode_covers(pdf["query_id"].to_numpy(), cov), len(rows)
+
+
+def _prefixes(q_cells: pd.DataFrame) -> list[int]:
+    """The level-3 prune prefixes of a driver-planned cell frame."""
+    return sorted(int(x) for x in pd.unique(q_cells["q_l3"]))
+
+
+def _lazy_query_cells(queries: DataFrame, bucket: int, max_cells: int) -> DataFrame:
     covered = _cover_queries(queries, bucket, max_cells)
     q_origin = covered.select(
         "query_id", F.explode("qcov.cells").alias("cell_id"), F.lit(False).alias("is_anc")
@@ -198,8 +209,7 @@ def _plan_query_cells(
         F.explode(F.expr(anc_lattice_sql("qcov.cells", bucket))).alias("cell_id"),
         F.lit(True).alias("is_anc"),
     )
-    q_cells = q_origin.unionByName(q_anc).withColumn("q_l3", F.expr(PARENT3_EXPR))
-    return q_cells, None, None
+    return q_origin.unionByName(q_anc).withColumn("q_l3", F.expr(PARENT3_EXPR))
 
 
 def index_bucket(index_path: str, bucket: int | None) -> int:
@@ -342,6 +352,80 @@ def search(
     return joined.filter(pred).select("query_id", "key_id", "key", "p_lat", "p_lng")
 
 
+def _union_groups(codes: np.ndarray, blobs) -> tuple[np.ndarray, ...]:
+    """(sorted-unique values, group starts, group ends, group codes) of the
+    union of each query code's bitmaps — one vectorized decode_many, no
+    per-query or per-blob Python (r5: a groupby/union_many loop was the
+    count path's CPU sink). Each uint32 value is packed under its
+    non-negative code into one int64, so a single-key np.unique sorts and
+    dedups: a two-key lexsort of the 17M (query, key) values of 32k wide
+    caps took 2.3x as long."""
+    vals, rows = bm.decode_many(blobs)
+    packed = np.unique((np.asarray(codes, np.int64)[rows] << 32) | vals.astype(np.int64))
+    c = packed >> 32
+    bounds = np.append(np.flatnonzero(np.diff(c, prepend=-1)), len(c))
+    starts = bounds[:-1]
+    return (packed & 0xFFFFFFFF).astype(np.uint32), starts, bounds[1:], c[starts]
+
+
+def _partials(codes: np.ndarray, blobs) -> tuple[np.ndarray, list[bytes]]:
+    """(codes, one union bitmap per code) of a partition's bitmaps."""
+    vals, starts, ends, c = _union_groups(codes, blobs)
+    return c, bm.encode_sorted_groups(vals, starts, ends)[0]
+
+
+def _count_frame(codes: np.ndarray, blobs, names) -> pd.DataFrame:
+    """(query_id = names[code], n_keys) from partial bitmaps by code."""
+    _, starts, ends, c = _union_groups(codes, blobs)
+    return pd.DataFrame({"query_id": names[c], "n_keys": ends - starts})
+
+
+def _concat(it) -> pd.DataFrame | None:
+    chunks = [pdf for pdf in it if len(pdf)]
+    return pd.concat(chunks, ignore_index=True) if chunks else None
+
+
+def _probe_partials(q_cells: pd.DataFrame):
+    """-> (mapInPandas function, query ids by code) that joins a
+    driver-planned cell frame with postings (cell_id, is_origin, bitmap)
+    rows inside the scan — the reference reader's per-cell posting lookup
+    (RoaringGeoMapReader.cpp:39-91) — and yields one (code, bitmap)
+    partial per query and partition.
+
+    The closure carries the frame's sorted unique cell ids, CSR offsets
+    into per-entry int32 query codes and an is_anc flag per entry
+    (PySpark ships a pickled command over 1 MiB as a broadcast). A posting
+    row meets every entry of its cell; an entry for a lattice ancestor of
+    a query cell only counts against an origin posting (an index cover
+    cell coarser than the query's)."""
+    codes, qids = pd.factorize(q_cells["query_id"], use_na_sentinel=False)
+    order = np.argsort(q_cells["cell_id"].to_numpy(), kind="stable")
+    cells = q_cells["cell_id"].to_numpy()[order]
+    first = np.flatnonzero(np.r_[True, cells[1:] != cells[:-1]])
+    ucell, off = cells[first], np.append(first, len(cells))
+    e_code = codes[order].astype(np.int32)
+    e_anc = q_cells["is_anc"].to_numpy(bool)[order]
+
+    def partial_union(it):
+        got_codes, got_blobs = [], []
+        for pdf in it:
+            cell = pdf["cell_id"].to_numpy()
+            pos = np.minimum(np.searchsorted(ucell, cell), len(ucell) - 1)
+            hit = np.flatnonzero(ucell[pos] == cell)
+            lo = off[pos[hit]]
+            n = off[pos[hit] + 1] - lo
+            row = np.repeat(hit, n)
+            ent = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(int(n.sum()))
+            keep = pdf["is_origin"].to_numpy(bool)[row] | ~e_anc[ent]
+            got_codes.append(e_code[ent[keep]])
+            got_blobs.append(pdf["bitmap"].to_numpy()[row[keep]])
+        if got_codes and sum(map(len, got_codes)):
+            c, blobs = _partials(np.concatenate(got_codes), np.concatenate(got_blobs))
+            yield pd.DataFrame({"code": c.astype(np.int32), "bitmap": blobs})
+
+    return partial_union, qids
+
+
 def count_keys(
     spark: SparkSession,
     index_path: str,
@@ -354,94 +438,93 @@ def count_keys(
     the bitmap fastunion path (A16/A17), never touching per-key rows.
 
     Postings exist for origin cells AND their lattice-ancestor rollups, so
-    this is the exact same broadcast equi-join shape as ``search``: the
-    query's origin cells match any posting row; the query's ancestor cells
-    match origin postings only.
+    the match is the same hierarchy equi-join as ``search``: the query's
+    origin cells match any posting row; the query's ancestor cells match
+    origin postings only.
 
-    A batch of up to DRIVER_FINAL_ROWS rows (planned on the driver)
-    finishes its union on the driver too: the per-partition partial
-    bitmaps are collected, unioned in query-disjoint chunks of about
-    _FINAL_CHUNK_BYTES on up to one thread per task slot, and the result
-    comes back as a local DataFrame, with no shuffle and no second Python
-    stage. Larger batches finish with a distributed union after a shuffle
-    by query_id. Either way a query without candidates has no row."""
+    A batch planned on the driver (up to SMALL_QUERY_ROWS rows) is joined
+    inside the mapInPandas that reads the pruned postings scan
+    (_probe_partials), with no query relation and no broadcast join; each
+    scan partition yields one (query code, partial bitmap) per query. Up to
+    DRIVER_FINAL_ROWS rows the partials are collected and unioned on the
+    driver in query-disjoint chunks of about _FINAL_CHUNK_BYTES, on up to
+    one thread per task slot, and the result comes back as a local
+    DataFrame; above it the union runs distributed after a shuffle by
+    code. Larger batches stay lazy: a broadcast join of the query cells
+    with postings, then the distributed union by query_id. Either way a
+    query without candidates has no row."""
     idx = open_index(spark, index_path)
-    q_cells, prefixes, n_rows = _plan_query_cells(
-        spark, queries, idx.bucket if bucket is None else bucket, max_cells
-    )
-
+    bucket = idx.bucket if bucket is None else bucket
     postings = idx.read("postings")
+    planned = _plan_query_cells(spark, queries, bucket, max_cells)
+    if planned is None:
+        return _count_lazy(postings, _lazy_query_cells(queries, bucket, max_cells), prune)
+    q_cells, n_rows = planned
+    if not len(q_cells):
+        return spark.createDataFrame([], _COUNT_SCHEMA)
     if prune:
-        if prefixes is None:
-            prefixes = [r["q_l3"] for r in q_cells.select("q_l3").distinct().collect()]
-        postings = postings.filter(F.col("cell_l3").isin(prefixes))
+        postings = postings.filter(F.col("cell_l3").isin(_prefixes(q_cells)))
+    partial_union, qids = _probe_partials(q_cells)
+    partials = postings.select("cell_id", "is_origin", "bitmap").mapInPandas(
+        partial_union, "code int, bitmap binary"
+    )
+    if n_rows > DRIVER_FINAL_ROWS:
+        return _final_union(partials, qids)
+    pdf = partials.toPandas()
+    if not len(pdf):
+        return spark.createDataFrame([], _COUNT_SCHEMA)
+    codes, blobs = pdf["code"].to_numpy(), pdf["bitmap"].to_numpy()
+    n = min(len(qids), 1 + int(pdf["bitmap"].map(len).sum()) // _FINAL_CHUNK_BYTES)
+    with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+        parts = list(pool.map(
+            lambda m: _count_frame(codes[m], blobs[m], qids), (codes % n == i for i in range(n))
+        ))
+    return spark.createDataFrame(pd.concat(parts, ignore_index=True), _COUNT_SCHEMA)
 
+
+def _count_lazy(postings: DataFrame, q_cells: DataFrame, prune: bool) -> DataFrame:
+    """count_keys of a batch above SMALL_QUERY_ROWS: broadcast join of the
+    lazily covered query cells with postings, a partial union per scan
+    partition, then a distributed union after a shuffle by query_id."""
+    if prune:
+        prefixes = [r["q_l3"] for r in q_cells.select("q_l3").distinct().collect()]
+        postings = postings.filter(F.col("cell_l3").isin(prefixes))
     matched = postings.join(F.broadcast(q_cells), on="cell_id", how="inner").filter(
         F.col("is_origin") | ~F.col("is_anc")
     )
 
-    def _union_groups(pdf):
-        """(sorted-unique values, group starts/ends, per-group query_id)
-        for all of a partition's (query_id, bitmap) rows — one vectorized
-        decode_many, no per-query or per-blob Python (r5: the
-        groupby/union_many loop here was the count path's CPU sink). Each
-        uint32 value is packed under its query's code into one int64, so
-        a single-key np.unique sorts and dedups: a two-key lexsort of the
-        17M (query, key) values of 32k wide caps took 2.3x as long."""
-        vals, rows = bm.decode_many(pdf["bitmap"].to_numpy())
-        codes, uniq = pd.factorize(pdf["query_id"], sort=False)
-        packed = np.unique((codes[rows].astype(np.int64) << 32) | vals.astype(np.int64))
-        c = packed >> 32
-        grp = np.flatnonzero(np.r_[True, c[1:] != c[:-1]]) if len(c) else np.empty(0, np.int64)
-        ends = np.append(grp[1:], len(c)).astype(np.int64)
-        return (packed & 0xFFFFFFFF).astype(np.uint32), grp, ends, uniq[c[grp]] if len(c) else []
-
-    def _counts(pdf):
-        _, starts, ends, qids = _union_groups(pdf)
-        return pd.DataFrame({"query_id": qids, "n_keys": ends - starts})
-
     def partial_union(it):
-        # phase 1 — partition-local: collapse each scan partition's matched
-        # posting rows to one partial bitmap per query (map-side combine;
-        # runs where the broadcast join ran, no shuffle)
-        chunks = list(it)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if not len(pdf):
-            return
-        vals, starts, ends, qids = _union_groups(pdf)
-        blobs, _ = bm.encode_sorted_groups(vals, starts, ends)
-        yield pd.DataFrame({"query_id": qids, "bitmap": blobs})
+        # partition-local: collapse each scan partition's matched posting
+        # rows to one partial bitmap per query (map-side combine, no shuffle)
+        pdf = _concat(it)
+        if pdf is not None:
+            codes, uniq = pd.factorize(pdf["query_id"])
+            c, blobs = _partials(codes, pdf["bitmap"].to_numpy())
+            yield pd.DataFrame({"query_id": uniq[c], "bitmap": blobs})
+
+    return _final_union(
+        matched.select("query_id", "bitmap").mapInPandas(partial_union, "query_id string, bitmap binary")
+    )
+
+
+def _final_union(partials: DataFrame, names=None) -> DataFrame:
+    """The distributed final: shuffle the (key, bitmap) partials by key,
+    union each key's bitmaps and count. Keys are query ids, or int query
+    codes into ``names``."""
+    key = partials.columns[0]
 
     def final_count(it):
-        # phase 2 — after a shuffle of the (tiny) partials by query_id
-        chunks = list(it)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if not len(pdf):
-            return
-        yield _counts(pdf)
+        pdf = _concat(it)
+        if pdf is not None:
+            codes, uniq = pd.factorize(pdf[key])
+            ids = uniq if names is None else names[np.asarray(uniq)]
+            yield _count_frame(codes, pdf["bitmap"].to_numpy(), ids)
 
-    schema = "query_id string, n_keys long"
-    partials = matched.select("query_id", "bitmap").mapInPandas(
-        partial_union, "query_id string, bitmap binary"
-    )
-    if n_rows is not None and n_rows <= DRIVER_FINAL_ROWS:
-        pdf = partials.toPandas()
-        codes, uniq = pd.factorize(pdf["query_id"], sort=False)
-        n = min(len(uniq), 1 + int(pdf["bitmap"].map(len).sum()) // _FINAL_CHUNK_BYTES)
-        with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
-            parts = list(pool.map(_counts, (pdf[codes % n == i] for i in range(n))))
-        if not parts:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(pd.concat(parts, ignore_index=True), schema)
     # fixed fan-in for the final union: the partials are one row per
     # (scan partition, query), so a handful of reducers suffices at any
     # parallelism level — tying this to shuffle_partitions made the tiny
     # final stage slower the more cores the session had
-    return partials.repartition(8, "query_id").mapInPandas(final_count, schema)
+    return partials.repartition(8, key).mapInPandas(final_count, _COUNT_SCHEMA)
 
 
 def _range_bounds_udf():

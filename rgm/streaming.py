@@ -158,8 +158,11 @@ def stream_index_append(
             F.col("cov.min_cell_ord").alias("min_cell_ord"),
             F.col("cov.cells").alias("cells"),
         )
-        with man.lease():
+        with man.lease() as lease:
             pairs.write.mode("append").parquet(pairs_dir)
+            # a lapsed lease fails the micro-batch here (LeaseLost) rather
+            # than append keys while a compaction may be swapping the stage
+            lease.renew()
             # appended key files carry the full keys schema (the same
             # payload-geometry columns the batch build writes), so
             # region-vs-region refinement works on streamed keys too

@@ -462,6 +462,80 @@ def test_compaction_vs_live_appender_lease(spark, tmp_path):
     )
 
 
+def test_slow_compaction_renews_or_fails_loudly(spark, tmp_path, monkeypatch):
+    """A compaction whose lease-held re-list -> copy -> commit outlasts the
+    lease TTL renews the lease after each copied file, so a waiter gets it
+    only once the commit is done. When one step alone outlasts the TTL, the
+    waiter takes the lease and the compaction raises LeaseLost, commits
+    nothing and leaves no tmp dir."""
+    from rgm import index as ridx
+    from rgm.checkpoint import LeaseLost, Manifest, WriterLease, manifest_doc
+
+    ttl = 1.0
+    monkeypatch.setattr(
+        Manifest, "lease",
+        lambda self, ttl_s=60.0, timeout_s=120.0: WriterLease(self.root, ttl_s=ttl, timeout_s=timeout_s),
+    )
+    out = str(tmp_path / "idx")
+    ridx.build_index(spark, _pts(spark, 80), "key", out, bucket=3, n_buckets=2)
+    pairs_dir = os.path.join(out, "pairs")
+    src_copy = str(tmp_path / "batch.parquet")
+    shutil.copy2(ridx._list_stage_files(out, "pairs")[0], src_copy)
+    copy = shutil.copy2
+
+    def compact(n_late, copy_delay):
+        """compact_pairs with n_late files appended after its snapshot, each
+        copied in copy_delay s under the lease, and a waiter that asks for
+        the lease 0.2 s in. -> (error or None, commit seen by the waiter)."""
+        seen, done = [], threading.Event()
+
+        def waiter():
+            time.sleep(0.2)
+            with WriterLease(out, ttl_s=10, timeout_s=20):
+                seen.append(manifest_doc(out)["stages"]["pairs"]["committed_utc"])
+                done.wait(20)
+
+        t = threading.Thread(target=waiter)
+
+        def hook():
+            for i in range(n_late):
+                copy(src_copy, os.path.join(pairs_dir, f"late-{copy_delay}-{i}.parquet"))
+            t.start()
+
+        def slow_copy(a, b):
+            time.sleep(copy_delay)
+            return copy(a, b)
+
+        monkeypatch.setattr(shutil, "copy2", slow_copy)
+        err = None
+        try:
+            ridx.compact_pairs(spark, out, n_buckets=2, _post_write_hook=hook)
+        except LeaseLost as e:
+            err = e
+        finally:
+            monkeypatch.setattr(shutil, "copy2", copy)
+            done.set()
+            t.join(30)
+        assert not t.is_alive()
+        return err, seen[0]
+
+    # 4 x 0.4 s of copies > the 1 s TTL: renewed, the waiter sees the commit
+    before = manifest_doc(out)["stages"]["pairs"]["committed_utc"]
+    err, seen = compact(4, 0.4)
+    stage = manifest_doc(out)["stages"]["pairs"]
+    assert err is None and seen == stage["committed_utc"] > before
+    assert stage["metrics"]["merged_appends"] == 4
+
+    # one 2 s copy: the lease lapses, the waiter takes it, nothing commits
+    rows = spark.read.parquet(pairs_dir).count()
+    err, seen = compact(1, 2.0)
+    assert isinstance(err, LeaseLost)
+    assert seen == manifest_doc(out)["stages"]["pairs"]["committed_utc"] == stage["committed_utc"]
+    assert not [d for d in os.listdir(out) if d.startswith("pairs.tmp-")]
+    assert spark.read.parquet(pairs_dir).count() == rows + spark.read.parquet(src_copy).count()
+    assert [p for p in os.listdir(out) if p.startswith("_writer.lock")] == []
+
+
 def test_operators_md_numeric_claims_resolve():
     """Every efficiency-like number OPERATORS.md quotes against a BENCH
     report must literally appear in that report (the r4 stale-0.826

@@ -416,13 +416,18 @@ def _counts(df) -> dict:
 
 
 def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeypatch):
-    """A batch of up to DRIVER_FINAL_ROWS finishes its bitmap union on the
-    driver, in one or many query-disjoint chunks, and returns a local
-    result; above it (planned on the driver or, above SMALL_QUERY_ROWS,
-    lazily) the union runs distributed after a shuffle. The same
-    batch forced through every final gives the same (query_id, n_keys),
-    equal to the distinct cell-level candidates of search(refine=False); a
-    query without candidates has no row either way."""
+    """A driver-planned batch is joined with postings inside the scan's
+    mapInPandas: no BroadcastExchange in its plan, which the lazy plan
+    above SMALL_QUERY_ROWS keeps. Up to DRIVER_FINAL_ROWS it finishes its
+    bitmap union on the driver, in one or many query-disjoint chunks, and
+    returns a local result; above it (planned on the driver or lazily) the
+    union runs distributed after a shuffle. Every path, with the covering
+    on the driver or distributed, gives the same (query_id, n_keys), equal
+    to the distinct cell-level candidates of search(refine=False), on a
+    batch with two ids of one region, nested caps that share cells, a
+    query without candidates, and a tiny cap whose lattice-ancestor cells
+    meet postings that are all non-origin (rollups of other keys) and must
+    not count: a pair counts only if ``is_origin | ~is_anc``."""
     rng = np.random.default_rng(17)
     n = 400
     lat = 37.0 + rng.uniform(-0.5, 0.5, n)
@@ -432,8 +437,17 @@ def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeyp
     )
     out = str(tmp_path / "idx")
     ridx.build_index(spark, pts, "key", out, bucket=3, n_buckets=4)
+    # the grid point farthest from every key, for a cap without candidates
+    g_lat, g_lng = (g.reshape(-1) for g in np.meshgrid(np.linspace(36.6, 37.4, 41), np.linspace(-122.4, -121.6, 41)))
+    far = np.argmax(np.min(np.hypot(g_lat[:, None] - lat, g_lng[:, None] - lng), axis=1))
     rows = [(f"q{i}", "cap", float(lat[i]), float(lng[i]), 2_000.0 + 1_500.0 * i) for i in range(12)]
-    rows.append(("miss", "cap", -45.0, 100.0, 1_000.0))
+    rows += [
+        ("dup-a", "cap", float(lat[3]), float(lng[3]), 9_000.0),
+        ("dup-b", "cap", float(lat[3]), float(lng[3]), 9_000.0),
+        ("nested", "cap", float(lat[5]), float(lng[5]), 1_000.0),
+        ("lonely", "cap", float(g_lat[far]), float(g_lng[far]), 30.0),
+        ("miss", "cap", -45.0, 100.0, 1_000.0),
+    ]
     q = spark.createDataFrame(rows, _CAPS)
 
     cands = {
@@ -441,21 +455,52 @@ def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeyp
         for r in rq.search(spark, out, q, refine=False)
         .groupBy("query_id").agg(F.countDistinct("key_id").alias("n")).collect()
     }
+    assert len(cands) == 15 and cands["dup-a"] == cands["dup-b"] and cands["nested"] > 0
+    # the tiny cap's ancestor cells do meet postings, all of them non-origin
+    planned, _ = rq._plan_query_cells(spark, q, 3, 30)
+    lonely = planned[planned["query_id"] == "lonely"]
+    met = ridx.load_postings(spark, out).filter(
+        F.col("cell_id").isin([int(c) for c in lonely["cell_id"]])
+    ).select("cell_id", "is_origin").toPandas()
+    assert len(met) and not met["is_origin"].any()
+    assert set(met["cell_id"]) <= set(lonely.loc[lonely["is_anc"], "cell_id"])
+
+    def plan_of(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    collected = []
+    frame_cls = type(q)
+    to_pandas = frame_cls.toPandas
+
+    def spy(self):
+        collected.append(plan_of(self))
+        return to_pandas(self)
+
+    monkeypatch.setattr(frame_cls, "toPandas", spy)
     on_driver = rq.count_keys(spark, out, q)
     assert on_driver._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
-    driver = _counts(on_driver)
+    assert len(collected) == 1 and "MapInPandas" in collected[0]
+    assert "BroadcastExchange" not in collected[0]
+    got = {"driver": _counts(on_driver)}
     monkeypatch.setattr(rq, "_FINAL_CHUNK_BYTES", 64)  # a chunk per query or two
-    chunked = _counts(rq.count_keys(spark, out, q))
+    got["chunked"] = _counts(rq.count_keys(spark, out, q))
+    monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", 2)
+    got["distributed cover"] = _counts(rq.count_keys(spark, out, q))
 
     monkeypatch.setattr(rq, "DRIVER_FINAL_ROWS", len(rows) - 1)
     distributed_df = rq.count_keys(spark, out, q)
-    assert "MapInPandas" in distributed_df._jdf.queryExecution().analyzed().toString()
-    distributed = _counts(distributed_df)
+    assert "MapInPandas" in plan_of(distributed_df)
+    assert "BroadcastExchange" not in plan_of(distributed_df)
+    got["distributed cover, distributed final"] = _counts(distributed_df)
+    monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", 4096)
+    got["distributed final"] = _counts(rq.count_keys(spark, out, q))
     monkeypatch.setattr(rq, "SMALL_QUERY_ROWS", len(rows) - 1)  # lazy plan too
-    lazy = _counts(rq.count_keys(spark, out, q))
+    lazy = rq.count_keys(spark, out, q)
+    assert "BroadcastExchange" in plan_of(lazy)
+    got["lazy"] = _counts(lazy)
 
-    assert driver == chunked == distributed == lazy == cands
-    assert len(driver) == 12 and "miss" not in driver
+    for path, counts in got.items():
+        assert counts == cands, path
 
 
 def test_count_keys_empty_batch_is_empty(spark, small_index):
@@ -528,3 +573,4 @@ def test_index_handle_follows_appends_and_rebuilds(spark, tmp_path, monkeypatch)
     assert _counts(rq.count_keys(spark, out, q)) == {"all": 20}
     assert seen == [1, 1]
     assert ridx.open_index(spark, out).bucket == 1
+
