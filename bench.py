@@ -398,9 +398,10 @@ def main() -> None:
         timed("contains_polygon", lambda: _count(bq.q_spatial_contains_polygon(spark, sf_dir)))
         timed("knn", lambda: _count(bq.q_spatial_knn(spark, sf_dir)))
 
-        # 200-point kNN batch: shows the per-round persist win (the r1 lazy
-        # ring-expansion re-ran prior rounds' lineage, which compounds with
-        # query count); not in the headline to keep r1 comparability
+        # 200-point kNN batch: each ring-expansion round spills to parquet,
+        # so no round re-runs prior rounds' lineage (the r1 lazy expansion
+        # did, which compounds with query count); not in the headline to
+        # keep r1 comparability
         def knn_200():
             qpts = spark.range(200).select(
                 F.concat(F.lit("k"), F.col("id")).alias("query_id"),

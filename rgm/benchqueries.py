@@ -236,16 +236,15 @@ _KNNB_LNG = "-124.0 + (({i} * 53) % 1000) / 1000.0 * 57.0"
 
 
 def q_spatial_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTRIBUTED kNN path under the oracle gate: batch_threshold is
-    forced below the batch size, so the query set is never collected and
-    round state spills to parquet (rgm.query._knn_distributed)."""
+    """A 60-point kNN batch under the oracle gate (rgm.query.knn: the
+    query set is never collected and round state spills to parquet)."""
     idx = index_path(spark, sf_dir)
     qdf = spark.range(KNN_BATCH_N).select(
         F.concat(F.lit("k"), F.col("id")).alias("query_id"),
         F.expr(_KNNB_LAT.format(i="id")).alias("lat"),
         F.expr(_KNNB_LNG.format(i="id")).alias("lng"),
     )
-    out = rq.knn(spark, idx, qdf, k=KNN_BATCH_K, r0_m=20_000, batch_threshold=10)
+    out = rq.knn(spark, idx, qdf, k=KNN_BATCH_K, r0_m=20_000)
     w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("key").asc())
     return (
         out.withColumn("rank", F.row_number().over(w).cast("long"))

@@ -99,6 +99,7 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
 
 
 _LUMA = np.array([0.299, 0.587, 0.114])
+_LUMA_MILLI = np.array([299, 587, 114], dtype=np.int64)
 _BIT_WEIGHTS = (np.uint64(1) << np.arange(64, dtype=np.uint64))
 
 
@@ -430,9 +431,12 @@ def decode_y4m(data: bytes) -> tuple[np.ndarray, int]:
 def synth_video(idx: int, n_frames: int = 12, w: int = 32, h: int = 32, seed: int = 42) -> np.ndarray:
     """Deterministic test clip: the image synth's luma plane, rolled one
     column per frame (so frame k == roll(frame 0, k) — an exact sampling
-    invariant)."""
-    px = synth_pixels(idx, w, h, seed)
-    luma = (px.astype(np.float64) @ _LUMA).round().astype(np.uint8)
+    invariant). The luma is integer arithmetic (BT.601 weights in
+    thousandths, rounded half up), so every host synthesizes the same
+    frames; a float matmul rounds differently with the summation path.
+    """
+    px = synth_pixels(idx, w, h, seed).astype(np.int64)
+    luma = ((px @ _LUMA_MILLI + 500) // 1000).astype(np.uint8)
     return np.stack([np.roll(luma, k, axis=1) for k in range(n_frames)])
 
 

@@ -51,7 +51,9 @@ def _cover_queries(queries: DataFrame, bucket: int, max_cells: int) -> DataFrame
 # as one small job and the exploded cell list and the level-3 prune
 # prefixes are built with numpy in driver memory (a broadcast join needs
 # the query side there anyway). count_keys probes the cell list inside its
-# postings scan; search makes it a local DataFrame for the broadcast join
+# postings scan; search makes it a local DataFrame for the broadcast join.
+# This is the planner's only batch-size split: knn and
+# similarity.ivf_search run one distributed path at every batch size
 SMALL_QUERY_ROWS = 100_000
 
 # ...but the covering KERNEL only runs on the driver below this row count.
@@ -62,7 +64,7 @@ SMALL_QUERY_ROWS = 100_000
 # parallelism and only the exploded (query_id, cell_id) frame returns to
 # the driver; below it, one ~2s Spark job floor would cost more than the
 # serial kernel saves.
-DRIVER_COVER_ROWS = int(os.environ.get("RGM_DRIVER_COVER_ROWS", "4096"))
+DRIVER_COVER_ROWS = 4096
 
 # count_keys batches up to this size finish their bitmap union on the
 # driver. Timed against the distributed final on the same plan (25k-point
@@ -141,16 +143,14 @@ def plan_query_cells(
     queries: DataFrame,
     bucket: int,
     max_cells: int,
-    collect_small: bool = True,
 ) -> tuple[DataFrame, list[int] | None]:
     """-> (q_cells(query_id, cell_id, is_anc, q_l3), prune prefixes or None).
 
     A batch of up to SMALL_QUERY_ROWS rows is planned on the driver
     (_plan_query_cells): its exploded cell frame becomes a local relation
     for the broadcast join and the prune prefixes come back as a list.
-    Larger batches, or collect_small=False, stay lazy and the prefixes are
-    None."""
-    planned = _plan_query_cells(spark, queries, bucket, max_cells) if collect_small else None
+    Larger batches stay lazy and the prefixes are None."""
+    planned = _plan_query_cells(spark, queries, bucket, max_cells)
     if planned is None:
         return _lazy_query_cells(queries, bucket, max_cells), None
     out = planned[0]
@@ -313,6 +313,13 @@ def search(
     Returns (query_id, key_id, key, p_lat, p_lng).
     """
     cand = candidate_keys(spark, index_path, queries, bucket, max_cells, prune)
+    if refine:
+        # AQE coalesces the small post-distinct stage to one task, which then
+        # runs the key joins and the refine UDF on one core; a repartition
+        # to a fixed count is never coalesced, so they run on every slot
+        cand = cand.repartition(
+            max(int(spark.sparkContext.defaultParallelism), 1), "query_id", "key_id"
+        )
     # payload-geometry columns are only read when region-vs-region
     # refinement needs them; the mass path (point refinement / cell-level
     # Contains) scans 4 narrow key columns
@@ -613,132 +620,15 @@ def tiles_for_regions(
     return covered.select("query_id", F.explode("tiles").alias("tile_id"))
 
 
-def knn(
-    spark: SparkSession,
-    index_path: str,
-    query_points: DataFrame,
-    k: int,
-    r0_m: float = 2000.0,
-    max_rounds: int = 8,
-    bucket: int | None = None,
-    batch_threshold: int = SMALL_QUERY_ROWS,
-    out_path: str | None = None,
-) -> DataFrame:
-    """k nearest indexed keys per query point (SURVEY Table C3).
-
-    Iterative ring expansion: issue cap queries of growing radius (x4 per
-    round) until a query has >= k exact candidates within the radius (then
-    the true kNN is a subset of them), finish with a per-query window top-k.
-
-    Two regimes, picked by query-batch size (same split as
-    plan_query_cells):
-
-    - up to ``batch_threshold`` queries: per-round state on the DRIVER,
-      round hits persist()-ed so no round re-evaluates prior lineage; the
-      small final result is materialized and the caches dropped.
-    - above it: the fully distributed path (_knn_distributed) — the query
-      set is NEVER collected; the remaining set lives as a DataFrame
-      (anti-join on the done ids) and round hits spill to parquet, so a
-      million-point query batch holds no driver-side row state.
-
-    ``out_path`` (distributed path only): where the final top-k parquet is
-    written — pass a shared-storage path the CALLER owns on a real
-    cluster. Default None writes under ``<index_path>/_scratch`` (shared
-    storage too, next to the index — never the driver-local tempdir) and
-    registers the directory for cleanup at interpreter exit
-    (cleanup_knn_scratch); the r3 verdict's leaked ``<tmp>_out`` dirs are
-    gone either way.
-    """
-    from pyspark.sql import Window
-
-    from .udfs import haversine_udf
-
-    qp = query_points.select("query_id", "lat", "lng")
-    head = qp.take(batch_threshold + 1)
-    if len(head) > batch_threshold:
-        return _knn_distributed(
-            spark, index_path, qp, k, r0_m, max_rounds, bucket, out_path
-        )
-    rem = [(r["query_id"], float(r["lat"]), float(r["lng"])) for r in head]
-    round_dfs: list[DataFrame] = []
-    cached: list[DataFrame] = []  # the persist()-ed parents to release
-    radius = r0_m
-    for rnd in range(max_rounds):
-        if not rem:
-            break
-        caps = spark.createDataFrame(
-            [(q, "cap", la, ln, float(radius)) for q, la, ln in rem],
-            "query_id string, kind string, lat double, lng double, radius_m double",
-        )
-        qpts = spark.createDataFrame(
-            [(q, la, ln) for q, la, ln in rem],
-            "query_id string, q_lat double, q_lng double",
-        )
-        hits = (
-            search(spark, index_path, caps, bucket=bucket, refine=True)
-            .join(F.broadcast(qpts), on="query_id")
-            .withColumn("dist_m", haversine_udf("p_lat", "p_lng", "q_lat", "q_lng"))
-            .select("query_id", "key_id", "key", "dist_m")
-            .persist()
-        )
-        # the count action materializes the cache; every later use hits it
-        cnts = {
-            r["query_id"]: r["n"]
-            for r in hits.groupBy("query_id").agg(F.count("*").alias("n")).collect()
-        }
-        done = {q for q, _, _ in rem if cnts.get(q, 0) >= k}
-        last_round = rnd == max_rounds - 1
-        if last_round:
-            round_dfs.append(hits)  # keep partial (<k) results too
-            cached.append(hits)
-        elif done:
-            # unpersisting the FILTERED child would not release the cached
-            # parent plan — track `hits` itself for release
-            round_dfs.append(hits.filter(F.col("query_id").isin(sorted(done))))
-            cached.append(hits)
-        else:
-            hits.unpersist()
-        rem = [t for t in rem if t[0] not in done]
-        radius *= 4.0
-    if not round_dfs:
-        # empty result typed from the index's actual key column (keys may be
-        # string OR arbitrary bytes — reference README.md:5-11)
-        keys0 = load_keys(spark, index_path).select("key_id", "key").limit(0)
-        return (
-            keys0.withColumn("query_id", F.lit(None).cast("string"))
-            .withColumn("dist_m", F.lit(None).cast("double"))
-            .withColumn("rank", F.lit(None).cast("int"))
-            .select("query_id", "key_id", "key", "dist_m", "rank")
-        )
-    results = round_dfs[0]
-    for d in round_dfs[1:]:
-        results = results.unionByName(d)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("key_id").asc())
-    ranked = (
-        results.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "key_id", "key", "dist_m", "rank")
-    )
-    # materialize the small (k x |queries|) result as a fresh local
-    # DataFrame so the per-round caches can be dropped HERE — returning the
-    # persisted plan leaked its cached blocks for the session lifetime
-    # (callers never unpersisted)
-    schema = ranked.schema
-    out_rows = ranked.collect()
-    for d in cached:
-        d.unpersist()
-    return spark.createDataFrame(out_rows, schema)
-
-
 _KNN_SCRATCH: list[str] = []  # default-output dirs pending cleanup
 _KNN_ATEXIT = False
 
 
 def cleanup_knn_scratch() -> int:
-    """Delete every default-location _knn_distributed result directory
-    created by this process (their DataFrames become unreadable). Runs
-    automatically at interpreter exit; call earlier to reclaim space.
-    Returns the number of directories removed."""
+    """Delete every default-location knn result directory created by this
+    process (their DataFrames become unreadable). Runs automatically at
+    interpreter exit; call earlier to reclaim space. Returns the number of
+    directories removed."""
     import shutil
 
     n = 0
@@ -748,38 +638,40 @@ def cleanup_knn_scratch() -> int:
     return n
 
 
-def _knn_distributed(
+def knn(
     spark: SparkSession,
     index_path: str,
-    qp: DataFrame,
+    query_points: DataFrame,
     k: int,
-    r0_m: float,
-    max_rounds: int,
-    bucket: int | None,
+    r0_m: float = 2000.0,
+    max_rounds: int = 8,
+    bucket: int | None = None,
     out_path: str | None = None,
 ) -> DataFrame:
-    """Large-batch kNN: ring expansion with all round state distributed.
+    """k nearest indexed keys per query point (SURVEY Table C3).
 
-    Per round: cap-search the REMAINING queries (a DataFrame — never
-    collected; covering goes through plan_query_cells' distributed path
-    when the batch exceeds its broadcast regime), spill the round's hits to
-    parquet (cuts lineage with zero cached blocks), and shrink the
-    remaining set by an ANTI-JOIN on the queries that reached k candidates.
-    Growing caps are supersets, so the union of all rounds' hits per query
-    equals its final round's candidate set — dedupe (query, key) then one
-    per-query window top-k. The only driver-side values are scalar counts.
+    Iterative ring expansion with all round state distributed: each round
+    cap-searches the REMAINING queries at a radius growing x4 per round
+    (starting at ``r0_m``), spills the round's hits to parquet (cuts
+    lineage with zero cached blocks), and shrinks the remaining set by an
+    ANTI-JOIN on the queries that reached k exact candidates (the true kNN
+    is then a subset of them). The query set is never collected, so one
+    code path serves a handful of points and a million alike. Growing caps
+    are supersets, so the union of all rounds' hits per query equals its
+    final round's candidate set — dedupe (query, key) then one per-query
+    window top-k (ties by ``key_id``). The only value the driver sees per
+    round is whether any query remains.
 
-    All round state lives under ``<index_path>/_scratch/knn-<nonce>`` —
-    the index's own (shared) filesystem, so executors on a real cluster
-    read/write the same files (the r3 tempfile.mkdtemp scratch only worked
-    in local mode). When the index location is READ-ONLY (the shared
-    published-index posture), the scratch falls back to a sibling of
-    ``out_path`` (the caller's writable shared storage) or, with no
-    out_path, to a driver-local tempdir — correct in local mode only, and
-    the docstring trade the r4 ADVICE asked for: a read-only index stays
-    queryable either way. The final top-k goes to ``out_path`` when given
-    (caller-owned lifecycle), else into the scratch dir, which is then
-    registered for atexit cleanup instead of leaking (r3 What's-wrong #2).
+    Every call leaves its result directory: the final top-k goes to
+    ``out_path`` when given (caller-owned lifecycle); else it is written
+    under ``<index_path>/_scratch/knn-<nonce>`` — the index's own (shared)
+    filesystem, never the driver-local tempdir — and that directory is
+    removed at interpreter exit or by cleanup_knn_scratch(). When the
+    index location is READ-ONLY (the shared published-index posture), the
+    scratch falls back to a sibling of ``out_path`` (the caller's writable
+    shared storage) or, with no out_path, to a driver-local tempdir —
+    correct in local mode only, so a cluster caller on a read-only index
+    passes ``out_path``.
     """
     import atexit
     import shutil
@@ -806,7 +698,7 @@ def _knn_distributed(
             work = tempfile.mkdtemp(prefix="rgm_knn_scratch_")
     rounds_written = 0
     rounds_dir = os.path.join(work, "rounds")
-    rem = qp
+    rem = query_points.select("query_id", "lat", "lng")
     radius = r0_m
     try:
         for rnd in range(max_rounds):

@@ -79,3 +79,16 @@ def test_stage_filtered_legs_time_only_requested_and_reuse_state():
     # attribution pairstage consumes)
     assert set(r1.get("build_stages", {})) == {"index_build"}
     assert set(r1["build_stages"]["index_build"]) >= {"covers", "keys", "pairs", "postings"}
+
+
+def test_eff_cell_keeps_zero_times_and_guards_zero_divisor():
+    """The floors reports' efficiency cell: a recorded 0.0 s stage time is
+    an efficiency, not a missing leg, and a 0 s 4N leg renders as missing
+    instead of raising ZeroDivisionError."""
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
+    from pairstage import eff_cell
+
+    assert eff_cell(0.0, 2.0) == "0.000"
+    assert eff_cell(2.0, 0.5) == "1.000"
+    assert eff_cell(1.0, 0.0) == "—"
+    assert eff_cell(None, 1.0) == "—" and eff_cell(1.0, None) == "—"

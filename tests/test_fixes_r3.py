@@ -194,32 +194,6 @@ def test_ivf_materialized_index(spark, emb, tmp_path):
     assert len(g & t) >= 0.6 * len(t)
 
 
-def test_knn_distributed_matches_driver_path(spark, tmp_path):
-    """Above batch_threshold, kNN switches to the distributed path (query
-    set never collected, round state on disk); results must equal the
-    driver-side path on the same input."""
-    from rgm import index as ridx
-    from rgm import query as rq
-
-    pts = spark.createDataFrame(
-        [(f"p{i}", "point", 30.0 + (i * 37 % 500) / 50.0, -110.0 + (i * 61 % 500) / 25.0)
-         for i in range(400)],
-        "key string, kind string, lat double, lng double",
-    )
-    out = str(tmp_path / "idx")
-    ridx.build_index(spark, pts, "key", out, bucket=3, n_buckets=4)
-
-    qdf = spark.createDataFrame(
-        [(f"q{i}", 31.0 + i * 0.37, -108.0 + i * 0.61) for i in range(24)],
-        "query_id string, lat double, lng double",
-    )
-    small = rq.knn(spark, out, qdf, k=5, r0_m=50_000)
-    big = rq.knn(spark, out, qdf, k=5, r0_m=50_000, batch_threshold=4)  # forces distributed
-    s = {(r["query_id"], r["rank"], r["key"]) for r in small.collect()}
-    b = {(r["query_id"], r["rank"], r["key"]) for r in big.collect()}
-    assert b == s and len(s) == 24 * 5
-
-
 def test_region_tiles_fixture_sandwich():
     """The tiles_for_regions oracle fixture is geometrically certified by
     an independent sandwich (haversine point membership for completeness,

@@ -1,12 +1,9 @@
 """Round-4 regression tests: hash-sampled IVF training + fingerprinted
-resume, distributed ivf_search, kNN scratch lifecycle (no leaked dirs),
-compaction append-merge guard, manifest doc-cache invalidation, ragged
-polygon-vs-ring refine kernels, OPERATORS.md claim audit."""
+resume, compaction append-merge guard, manifest doc-cache invalidation,
+ragged polygon-vs-ring refine kernels, OPERATORS.md claim audit."""
 
-import glob
 import os
 import shutil
-import tempfile
 
 import numpy as np
 import pytest
@@ -99,84 +96,6 @@ def test_ivf_resume_fingerprint(spark, tmp_path, emb):
     assert manifest_doc(out)["stages"]["vectors"]["committed_utc"] != t2
 
 
-def test_ivf_search_distributed_matches_broadcast(spark, tmp_path, emb):
-    """Forcing the distributed query-planning path (batch above threshold:
-    probe rows never collected, corpus joined on cell) returns exactly the
-    broadcast path's top-k."""
-    from rgm import similarity as rsim
-
-    out = str(tmp_path / "ivf")
-    rsim.build_ivf_index(spark, emb, out, n_cells=8, iters=3, sample_rows=200)
-    queries = emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").cast("string").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-    )
-    small = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in rsim.ivf_search(spark, out, queries, k=5, nprobe=3).collect()
-    }
-    dist = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in rsim.ivf_search(
-            spark, out, queries, k=5, nprobe=3, batch_threshold=2
-        ).collect()
-    }
-    assert dist == small and len(small) == 30
-
-
-@pytest.fixture(scope="module")
-def spatial_idx(spark, tmp_path_factory):
-    from rgm import index as ridx
-
-    pts = spark.createDataFrame(
-        [
-            (f"p{i}", "point", 30.0 + (i * 37 % 100) / 10.0, -110.0 + (i * 53 % 100) / 10.0)
-            for i in range(200)
-        ],
-        "key string, kind string, lat double, lng double",
-    )
-    out = str(tmp_path_factory.mktemp("knnidx") / "idx")
-    ridx.build_index(spark, pts, "key", out, bucket=3, n_buckets=2)
-    return out
-
-
-def test_knn_distributed_scratch_lifecycle(spark, tmp_path, spatial_idx):
-    """The distributed kNN path must not leak result dirs: no rgm_knn_*
-    dirs in the system tempdir (the r3 leak), the default scratch lives
-    under <index>/_scratch and cleanup_knn_scratch() removes it, and an
-    explicit out_path leaves NO scratch behind at all."""
-    from rgm import query as rq
-
-    qdf = spark.createDataFrame(
-        [(f"q{i}", 31.0 + i, -109.0 + i) for i in range(4)],
-        "query_id string, lat double, lng double",
-    )
-    driver = {
-        (r["query_id"], r["key"], r["rank"])
-        for r in rq.knn(spark, spatial_idx, qdf, k=3, r0_m=50_000).collect()
-    }
-
-    before_tmp = set(glob.glob(os.path.join(tempfile.gettempdir(), "rgm_knn_*")))
-    got = rq.knn(spark, spatial_idx, qdf, k=3, r0_m=50_000, batch_threshold=2)
-    dist = {(r["query_id"], r["key"], r["rank"]) for r in got.collect()}
-    assert dist == driver and len(dist) == 12
-    assert set(glob.glob(os.path.join(tempfile.gettempdir(), "rgm_knn_*"))) == before_tmp
-    scratch = glob.glob(os.path.join(spatial_idx, "_scratch", "knn-*"))
-    assert len(scratch) == 1  # default output, registered for cleanup
-    assert rq.cleanup_knn_scratch() >= 1
-    assert glob.glob(os.path.join(spatial_idx, "_scratch", "knn-*")) == []
-
-    # caller-owned out_path: result lands there, zero scratch remains
-    out_path = str(tmp_path / "knn_out")
-    got2 = rq.knn(
-        spark, spatial_idx, qdf, k=3, r0_m=50_000, batch_threshold=2,
-        out_path=out_path,
-    )
-    assert {(r["query_id"], r["key"], r["rank"]) for r in got2.collect()} == driver
-    assert os.path.isdir(out_path)
-    assert glob.glob(os.path.join(spatial_idx, "_scratch", "knn-*")) == []
-
-
 def test_compaction_merges_concurrent_appends(spark, tmp_path):
     """Files appended to the pairs stage WHILE a compaction rewrites it are
     merged into the committed directory, not silently deleted (ADVICE r3:
@@ -236,13 +155,16 @@ def test_manifest_flush_invalidates_doc_cache(tmp_path):
 def test_operators_md_claims_resolve():
     """Every 'DuckDB ✅ (`key`...)' claim in OPERATORS.md names a query
     registered in both QUERIES and ORACLES (r3 shipped a claim for a
-    nonexistent dedup_image_phash query)."""
+    nonexistent dedup_image_phash query), and every backticked `test_*`
+    name it cites is a test function or module under tests/ or
+    perfbench/."""
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     import selfcheck
 
     assert selfcheck.audit_claims() == []
+    assert selfcheck.audit_test_citations() == []
     # and the r4 fix itself is registered
     from rgm import benchqueries as bq
 

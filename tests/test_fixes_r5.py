@@ -1,7 +1,6 @@
 """Round-5 regression tests: build_index resume fingerprint (stale-index
-serve), non-cancelling corpus fingerprint, byte-bounded ivf_search
-broadcast regime, int8-quantized IVF candidates with exact rerank, kNN on
-a read-only index, writer lease (mutual exclusion + TTL steal) closing the
+serve), non-cancelling corpus fingerprint, int8-quantized IVF candidates
+with exact rerank, writer lease (mutual exclusion + TTL steal) closing the
 compaction-vs-append race, and the real WAV/Y4M codecs."""
 
 import json
@@ -121,46 +120,8 @@ def test_source_stats_order_insensitive(spark):
 
 
 # ---------------------------------------------------------------------------
-# IVF: byte-bounded broadcast regime + quantized candidates (verdict #5/#6)
+# IVF: quantized candidates (verdict #6)
 # ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def wide_emb(spark):
-    rng = np.random.default_rng(11)
-    dim = 64
-    rows = [
-        (i, (rng.standard_normal(dim) + (i % 5)).tolist()) for i in range(300)
-    ]
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).cache()
-
-
-def test_ivf_search_byte_bound_forces_distributed(spark, tmp_path, wide_emb):
-    """A small query COUNT with wide vectors must still route to the
-    distributed regime when the estimated collect bytes exceed the byte
-    budget — and return exactly the broadcast regime's result."""
-    from rgm import similarity as rsim
-
-    out = str(tmp_path / "ivf")
-    rsim.build_ivf_index(spark, wide_emb, out, n_cells=6, iters=2, sample_rows=300)
-    queries = wide_emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").cast("string").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-    )
-    broad = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in rsim.ivf_search(spark, out, queries, k=4, nprobe=3).collect()
-    }
-    # 5 queries x nprobe 3 x (64*8+48) bytes ~ 8.4 kB > 1 kB budget
-    forced = {
-        (r["query_id"], r["vec_id"], r["rank"])
-        for r in rsim.ivf_search(
-            spark, out, queries, k=4, nprobe=3, batch_bytes=1024
-        ).collect()
-    }
-    assert forced == broad and len(broad) == 20
 
 
 def test_ivf_quantized_recall_and_rerank(spark, tmp_path, wide_emb):
@@ -238,59 +199,6 @@ def test_ivf_quantized_requires_quantized_index(spark, tmp_path, wide_emb):
     )
     with pytest.raises(ValueError, match="quantize=True"):
         rsim.ivf_search(spark, out, queries, k=3, quantized=True)
-
-
-# ---------------------------------------------------------------------------
-# kNN on a read-only index (ADVICE r4 #4)
-# ---------------------------------------------------------------------------
-
-
-def test_knn_distributed_read_only_index(spark, tmp_path, monkeypatch):
-    """A published (read-only) index stays queryable on the distributed
-    path: scratch falls back to the out_path's filesystem (or a tempdir
-    without out_path) instead of failing os.makedirs under the index.
-
-    chmod can't simulate read-only for root (CAP_DAC_OVERRIDE), so the
-    denial is injected: os.makedirs raises PermissionError for any path
-    under the index root, exactly what a read-only mount produces."""
-    from rgm import index as ridx
-    from rgm import query as rq
-
-    out = str(tmp_path / "roidx")
-    ridx.build_index(spark, _pts(spark, 120), "key", out, bucket=3, n_buckets=2)
-    qdf = spark.createDataFrame(
-        [(f"q{i}", 31.0 + i, -109.0 + i) for i in range(4)],
-        "query_id string, lat double, lng double",
-    )
-    want = {
-        (r["query_id"], r["key"], r["rank"])
-        for r in rq.knn(spark, out, qdf, k=3, r0_m=50_000).collect()
-    }
-
-    real_makedirs = os.makedirs
-
-    def deny_under_index(path, *a, **kw):
-        if os.path.abspath(path).startswith(os.path.abspath(out) + os.sep):
-            raise PermissionError(13, "Read-only file system", path)
-        return real_makedirs(path, *a, **kw)
-
-    monkeypatch.setattr(os, "makedirs", deny_under_index)
-    try:
-        out_path = str(tmp_path / "knn_out")
-        got = rq.knn(
-            spark, out, qdf, k=3, r0_m=50_000, batch_threshold=2, out_path=out_path
-        )
-        assert {(r["query_id"], r["key"], r["rank"]) for r in got.collect()} == want
-        assert not os.path.exists(os.path.join(out, "_scratch"))
-        # the scratch lived (and was removed) beside the caller's out_path
-        assert os.path.isdir(out_path)
-        # no-out_path fallback: driver-local tempdir (local mode)
-        got2 = rq.knn(spark, out, qdf, k=3, r0_m=50_000, batch_threshold=2)
-        assert {(r["query_id"], r["key"], r["rank"]) for r in got2.collect()} == want
-        assert not os.path.exists(os.path.join(out, "_scratch"))
-    finally:
-        monkeypatch.undo()
-        rq.cleanup_knn_scratch()
 
 
 # ---------------------------------------------------------------------------

@@ -115,3 +115,27 @@ def test_audio_stub_plumbing(spark):
     rows = {r["key"]: r for r in rimg.audio_features(df).collect()}
     assert rows["a"]["rms"] is not None and rows["a"]["n_samples"] == 4000
     assert rows["b"]["rms"] is None and "not available" in rows["b"]["error"]
+
+
+def test_video_luma_fixture_matches_synth_video():
+    """Every row of the media_video_stats oracle fixture equals the mean
+    luma of the clip synth_video makes for it, bit for bit, on this host:
+    the fixture must not depend on the float summation path of the host
+    that generated it."""
+    import os
+
+    import pandas as pd
+
+    from rgm.benchqueries import VIDEO_WH
+
+    fix = pd.read_parquet(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "fixtures", "video_luma.parquet")
+    )
+    assert len(fix) > 0
+    bad = [
+        int(r.vid) for r in fix.itertuples()
+        if rimg.synth_video(int(r.vid), int(r.n_frames), VIDEO_WH, VIDEO_WH)
+        .astype(np.float64).mean() != r.mean_luma
+    ]
+    assert bad == []

@@ -574,3 +574,130 @@ def test_index_handle_follows_appends_and_rebuilds(spark, tmp_path, monkeypatch)
     assert seen == [1, 1]
     assert ridx.open_index(spark, out).bucket == 1
 
+
+
+# ---------------------------------------------------------------------------
+# kNN: brute-force top-k, scratch lifecycle, read-only index
+# ---------------------------------------------------------------------------
+
+_QPTS = "query_id string, lat double, lng double"
+
+
+def _grid_points(spark, n, mod, lat_div, lng_mul, lng_div):
+    rows = [
+        (f"p{i}", "point", 30.0 + (i * 37 % mod) / lat_div, -110.0 + (i * lng_mul % mod) / lng_div)
+        for i in range(n)
+    ]
+    return rows, spark.createDataFrame(rows, _POINTS)
+
+
+def _brute_knn(spark, index_path, rows, queries, k):
+    """{(query_id, key, rank)}: numpy haversine top-k over the indexed
+    points, ties broken by key_id like knn's window."""
+    from rgm import geo
+
+    kid = {r["key"]: r["key_id"] for r in ridx.load_keys(spark, index_path, payload=False).collect()}
+    keys = [r[0] for r in rows]
+    lat = np.array([r[2] for r in rows])
+    lng = np.array([r[3] for r in rows])
+    ids = np.array([kid[key] for key in keys])
+    want = set()
+    for qid, qlat, qlng in queries:
+        d = geo.haversine_m(lat, lng, qlat, qlng)
+        for rank, j in enumerate(np.lexsort((ids, d))[:k], start=1):
+            want.add((qid, keys[j], rank))
+    return want
+
+
+def _knn_set(df):
+    return {(r["query_id"], r["key"], r["rank"]) for r in df.collect()}
+
+
+def test_knn_matches_haversine_topk(spark, tmp_path):
+    """24 points against a 400-point index: knn returns exactly the numpy
+    haversine top-k per query, in rank order."""
+    rows, pts = _grid_points(spark, 400, 500, 50.0, 61, 25.0)
+    out = str(tmp_path / "idx")
+    ridx.build_index(spark, pts, "key", out, bucket=3, n_buckets=4)
+    queries = [(f"q{i}", 31.0 + i * 0.37, -108.0 + i * 0.61) for i in range(24)]
+    got = _knn_set(rq.knn(spark, out, spark.createDataFrame(queries, _QPTS), k=5, r0_m=50_000))
+    assert got == _brute_knn(spark, out, rows, queries, 5) and len(got) == 24 * 5
+
+
+@pytest.fixture(scope="module")
+def knn_points(spark, tmp_path_factory):
+    """200 points, each location held by two keys (p{i} and p{i+100}), so
+    the top-k has exact distance ties that only key_id orders."""
+    rows, pts = _grid_points(spark, 200, 100, 10.0, 53, 10.0)
+    out = str(tmp_path_factory.mktemp("knnidx") / "idx")
+    ridx.build_index(spark, pts, "key", out, bucket=3, n_buckets=2)
+    return out, rows
+
+
+def test_knn_scratch_lifecycle(spark, tmp_path, knn_points):
+    """knn leaks no result dirs: none in the system tempdir, the default
+    result lives under <index>/_scratch until cleanup_knn_scratch()
+    removes it, and an explicit out_path leaves NO scratch behind."""
+    import glob
+    import os
+    import tempfile
+
+    idx, rows = knn_points
+    queries = [(f"q{i}", 31.0 + i, -109.0 + i) for i in range(4)]
+    qdf = spark.createDataFrame(queries, _QPTS)
+    want = _brute_knn(spark, idx, rows, queries, 3)
+    assert len(want) == 12
+
+    before_tmp = set(glob.glob(os.path.join(tempfile.gettempdir(), "rgm_knn_*")))
+    assert _knn_set(rq.knn(spark, idx, qdf, k=3, r0_m=50_000)) == want
+    assert set(glob.glob(os.path.join(tempfile.gettempdir(), "rgm_knn_*"))) == before_tmp
+    scratch = glob.glob(os.path.join(idx, "_scratch", "knn-*"))
+    assert len(scratch) == 1  # default output, registered for cleanup
+    assert rq.cleanup_knn_scratch() >= 1
+    assert glob.glob(os.path.join(idx, "_scratch", "knn-*")) == []
+
+    # caller-owned out_path: result lands there, zero scratch remains
+    out_path = str(tmp_path / "knn_out")
+    assert _knn_set(rq.knn(spark, idx, qdf, k=3, r0_m=50_000, out_path=out_path)) == want
+    assert os.path.isdir(out_path)
+    assert glob.glob(os.path.join(idx, "_scratch", "knn-*")) == []
+
+
+def test_knn_read_only_index(spark, tmp_path, monkeypatch):
+    """A published (read-only) index stays queryable: scratch falls back
+    to the out_path's filesystem (or a tempdir without out_path) instead
+    of failing os.makedirs under the index.
+
+    chmod can't simulate read-only for root (CAP_DAC_OVERRIDE), so the
+    denial is injected: os.makedirs raises PermissionError for any path
+    under the index root, exactly what a read-only mount produces."""
+    import os
+
+    rows, pts = _grid_points(spark, 120, 100, 10.0, 53, 10.0)
+    out = str(tmp_path / "roidx")
+    ridx.build_index(spark, pts, "key", out, bucket=3, n_buckets=2)
+    queries = [(f"q{i}", 31.0 + i, -109.0 + i) for i in range(4)]
+    qdf = spark.createDataFrame(queries, _QPTS)
+    want = _brute_knn(spark, out, rows, queries, 3)
+
+    real_makedirs = os.makedirs
+
+    def deny_under_index(path, *a, **kw):
+        if os.path.abspath(path).startswith(os.path.abspath(out) + os.sep):
+            raise PermissionError(13, "Read-only file system", path)
+        return real_makedirs(path, *a, **kw)
+
+    monkeypatch.setattr(os, "makedirs", deny_under_index)
+    try:
+        out_path = str(tmp_path / "knn_out")
+        got = rq.knn(spark, out, qdf, k=3, r0_m=50_000, out_path=out_path)
+        assert _knn_set(got) == want
+        assert not os.path.exists(os.path.join(out, "_scratch"))
+        # the scratch lived (and was removed) beside the caller's out_path
+        assert os.path.isdir(out_path)
+        # no-out_path fallback: driver-local tempdir (local mode)
+        assert _knn_set(rq.knn(spark, out, qdf, k=3, r0_m=50_000)) == want
+        assert not os.path.exists(os.path.join(out, "_scratch"))
+    finally:
+        monkeypatch.undo()
+        rq.cleanup_knn_scratch()

@@ -168,6 +168,10 @@ def test_stream_dedup_exact_stateful(spark, tmp_path):
     # batch 2: ids 6-9, texts C D A D     -> first id 7(D) only
     pd.DataFrame({"doc_id": [6, 7, 8, 9],
                   "text": ["C", "D", "A", "D"]}).to_parquet(src_dir + "/f2.parquet")
+    # the file source admits files in modification-time order; two files
+    # written in the same millisecond tie and may arrive as f2, f1
+    t1 = os.path.getmtime(src_dir + "/f1.parquet")
+    os.utime(src_dir + "/f2.parquet", (t1 + 1.0, t1 + 1.0))
 
     stream = (
         spark.readStream.schema("doc_id long, text string")

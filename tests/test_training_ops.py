@@ -126,6 +126,35 @@ def test_ivf_topk_recall(spark, emb):
     assert recall >= 0.6, f"IVF recall too low: {recall}"
 
 
+def _ivf_probe_all_matches_brute(spark, vectors, out, n_cells, n_queries, k):
+    """With every cell probed, ivf_search is exact: it must equal
+    brute_topk by (query_id, vec_id, rank)."""
+    from rgm import similarity as rsim
+
+    rsim.build_ivf_index(spark, vectors, out, n_cells=n_cells, iters=2, sample_rows=300)
+    queries = vectors.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").cast("string").alias("query_id"),
+        F.col("embedding").alias("q_embedding"),
+    )
+
+    def ranked(df):
+        return {(r["query_id"], r["vec_id"], r["rank"]) for r in df.collect()}
+
+    got = ranked(rsim.ivf_search(spark, out, queries, k=k, nprobe=n_cells))
+    assert got == ranked(rsim.brute_topk(vectors, queries, k=k))
+    assert len(got) == n_queries * k
+
+
+def test_ivf_search_all_cells_matches_brute(spark, tmp_path, emb):
+    _ivf_probe_all_matches_brute(spark, emb, str(tmp_path / "ivf"), n_cells=8, n_queries=6, k=5)
+
+
+def test_ivf_search_wide_embeddings_matches_brute(spark, tmp_path, wide_emb):
+    """64-dim vectors: the probe rows are wide, and the result is still
+    the exact top-k."""
+    _ivf_probe_all_matches_brute(spark, wide_emb, str(tmp_path / "ivf"), n_cells=6, n_queries=5, k=4)
+
+
 def test_embedding_neardup_finds_closest_pair(spark, emb):
     from rgm import dedup as rdd
 

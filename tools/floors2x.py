@@ -28,7 +28,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pairstage import run_leg  # returncode-checked bench subprocess
+from pairstage import eff_cell, run_leg  # returncode-checked bench subprocess
 
 LOG = os.path.join(ROOT, "BENCH", "floors2x.jsonl")
 REPORT = os.path.join(ROOT, "BENCH", "FLOORS_2X.md")
@@ -69,9 +69,6 @@ def main() -> None:
                         f.write(json.dumps(rec) + "\n")
                     print(json.dumps(rec), flush=True)
 
-    def eff(lo, hi):
-        return round((lo / hi) / 4, 3)
-
     lines = [
         "# BENCH/FLOORS_2X — does the index_build scaling gap amortize with corpus size?",
         "",
@@ -95,11 +92,11 @@ def main() -> None:
         lo, hi = d[2], d[8]
         cells = [
             str(rep), tag, f"{lo['sec']:.1f}", f"{hi['sec']:.1f}",
-            f"{eff(lo['sec'], hi['sec']):.3f}",
+            eff_cell(lo['sec'], hi['sec']),
         ]
         for s in BUILD_STAGES:
             a, b = lo["build_stages"].get(s), hi["build_stages"].get(s)
-            cells.append(f"{eff(a, b):.3f}" if a and b else "—")
+            cells.append(eff_cell(a, b))
         lines.append("| " + " | ".join(cells) + " |")
     lines.append("")
     with open(REPORT, "w") as f:

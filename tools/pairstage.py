@@ -100,6 +100,15 @@ def _eff(t_low: float, t_high: float, ratio: int) -> float:
     return round((t_low / t_high) / ratio, 3)
 
 
+def eff_cell(lo: float | None, hi: float | None) -> str:
+    """Stage-paired N->4N efficiency (lo / hi) / 4 as a report cell; "—"
+    when a leg recorded no time or the 4N leg took 0 s (a recorded 0.0
+    at N is a real efficiency of 0)."""
+    if lo is None or hi is None or hi <= 0:
+        return "—"
+    return f"{lo / hi / 4:.3f}"
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--report-only"]
     report_only = "--report-only" in sys.argv

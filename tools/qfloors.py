@@ -36,6 +36,9 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pairstage import eff_cell
 
 LOG = os.path.join(ROOT, "BENCH", "qfloors.jsonl")
 REPORT = os.path.join(ROOT, "BENCH", "QUERY_FLOORS.md")
@@ -110,9 +113,6 @@ def main() -> None:
                         f.write(json.dumps(rec) + "\n")
                     print(json.dumps(rec), flush=True)
 
-    def eff(lo: float, hi: float) -> float:
-        return round((lo / hi) / 4, 3)
-
     lines = [
         "# BENCH/QUERY_FLOORS — do the query-stage job floors amortize with batch size?",
         "",
@@ -154,11 +154,11 @@ def main() -> None:
         thi = sum(hi["stages"].values())
         cells = [
             str(rep), tag, str(lo["n_caps"]), f"{tlo:.1f}", f"{thi:.1f}",
-            f"{eff(tlo, thi):.3f}",
+            eff_cell(tlo, thi),
         ]
         for s in QUERY_STAGES:
             a, b = lo["stages"].get(s), hi["stages"].get(s)
-            cells.append(f"{eff(a, b):.3f}" if a and b else "—")
+            cells.append(eff_cell(a, b))
         lines.append("| " + " | ".join(cells) + " |")
     lines.append("")
     with open(REPORT, "w") as f:

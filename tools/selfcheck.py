@@ -78,6 +78,29 @@ def audit_numeric_claims() -> list[str]:
     return bad
 
 
+_TEST_NAME_RE = re.compile(r"\btest_\w+")
+_TEST_DEF_RE = re.compile(r"^def (test_\w+)", re.M)
+
+
+def audit_test_citations() -> list[str]:
+    """Every `test_*` name OPERATORS.md cites inside backticks must be a
+    test function or a test module under tests/ or perfbench/, so a
+    renamed or deleted test cannot leave a claim pointing at nothing.
+    Returns the names that resolve to neither."""
+    import glob
+
+    known = set()
+    for d in ("tests", "perfbench"):
+        for fn in glob.glob(os.path.join(ROOT, d, "test_*.py")):
+            known.add(os.path.basename(fn)[:-3])
+            with open(fn) as fh:
+                known.update(_TEST_DEF_RE.findall(fh.read()))
+    with open(os.path.join(ROOT, "OPERATORS.md")) as f:
+        spans = re.findall(r"`([^`\n]*)`", f.read())
+    cited = {n for s in spans for n in _TEST_NAME_RE.findall(s)}
+    return sorted(cited - known)
+
+
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
@@ -97,6 +120,11 @@ def main() -> int:
         print(f"FAIL  OPERATORS.md quotes numbers absent from the cited BENCH files: {badnum}")
         return 1
     print("ok    OPERATORS.md BENCH-cited numbers all present in the cited files")
+    badtests = audit_test_citations()
+    if badtests:
+        print(f"FAIL  OPERATORS.md cites tests that do not exist: {badtests}")
+        return 1
+    print("ok    OPERATORS.md test citations all resolve to tests")
     if "--audit" in sys.argv:
         return 0
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
