@@ -5,7 +5,7 @@
 #   make oracle       local stand-in for the driver's DuckDB correctness gate
 .PHONY: check audit oracle
 audit:
-	python tools/selfcheck.py --audit
+	python tools/checkoracle.py --audit
 check: audit
 	python -m pytest tests/ -q
 	python -m pytest perfbench/test_perfbench.py -q

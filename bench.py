@@ -16,15 +16,19 @@ Drift robustness (r4 verdict #4): a full bench run repeats the whole
 measured pass SPARK_GRAFT_BENCH_REPS times (default 3; stage-filtered legs
 default 1) in ONE process and reports per-query MINIMA across reps
 alongside the rep-0 single-run numbers — the per-round JSON then carries
-the attrib-style drift-robust table by construction, so cross-round
-comparisons don't depend on which host window the snapshot landed in.
+a drift-robust table by construction, so cross-round comparisons don't
+depend on which host window the snapshot landed in. To time a few queries
+against each other, name them:
+  SPARK_GRAFT_STAGES=ann_cosine_topk,text_stats,text_tokens_bpe,dedup_simhash \
+  SPARK_GRAFT_BENCH_REPS=5 python bench.py
+runs them interleaved in one warmed process and reports per-query minima.
 
-Scaling evidence (north_rule): run via tools/scaling.py (full-run pairs)
-or tools/pairstage.py (stage-interleaved pairs) at two parallelism levels
-on identical input; efficiency = (T_N / T_4N) / 4. Timed index builds
-also emit per-build-stage seconds (build_stages, from the index manifest)
-so scaling reports can attribute the build's N->4N gap to
-covers/keys/pairs/postings.
+Scaling evidence (north_rule): run via tools/pairstage.py (full-run or
+stage-interleaved pairs, corpus-size and cap-batch sweeps) at two
+parallelism levels on identical input; efficiency = (T_N / T_4N) / 4.
+Timed index builds also emit per-build-stage seconds (build_stages, from
+the index manifest) so scaling reports can attribute the build's N->4N gap
+to covers/keys/pairs/postings.
 """
 
 from __future__ import annotations
@@ -47,7 +51,7 @@ def _count(df) -> int:
 
 def work_rows(n_points: int, n_regions: int, rows: dict) -> int:
     """The throughput numerator — ONE definition shared with
-    tools/scaling.py so BENCH json and BASELINE.md agree."""
+    tools/pairstage.py so BENCH json and BASELINE.md agree."""
     return (
         n_points + n_regions
         + rows.get("tile_assign_s2", 0) + rows.get("contains_2000_caps", 0)
@@ -165,7 +169,7 @@ def main() -> None:
             F.col("image_id").alias("key"), F.lit("point").alias("kind"), "lat", "lng"
         )
         # optional deterministic synthetic scale-up (identical at every
-        # parallelism level — used by tools/scaling.py so the efficiency
+        # parallelism level — used by tools/pairstage.py so the efficiency
         # measurement is dominated by parallel work, not fixed job overhead)
         extra = int(os.environ.get("SPARK_GRAFT_EXTRA_POINTS", "0"))
         if extra > 0:
@@ -283,10 +287,10 @@ def main() -> None:
 
         # -- reference-shaped query batch: 2000 x 1 km caps ------------------
         # SPARK_GRAFT_BENCH_CAPS scales the batch for the query-floors proof
-        # (tools/qfloors.py); stage names keep the canonical 2000 tag, and
-        # qfloors logs to its own jsonl so scaled runs never pollute the
-        # stage-pair minima. Queries only — no committed index state depends
-        # on this knob, so resume reuse stays valid.
+        # (`tools/pairstage.py caps`); stage names keep the canonical 2000
+        # tag, and that sweep logs to its own jsonl so scaled runs never
+        # pollute the stage-pair minima. Queries only — no committed index
+        # state depends on this knob, so resume reuse stays valid.
         n_caps = int(os.environ.get("SPARK_GRAFT_BENCH_CAPS", "2000"))
         caps = spark.range(n_caps).select(
             F.concat(F.lit("c"), F.col("id")).alias("query_id"),

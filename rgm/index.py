@@ -412,19 +412,6 @@ def compact_keys(
     )
 
 
-def maybe_compact_pairs(
-    spark: SparkSession, index_path: str, max_files: int = 64,
-    n_buckets: int | None = None, codec: str = "snappy",
-) -> bool:
-    """Compact the pairs table when its fragment count exceeds
-    ``max_files`` (the manifest-driven hook a streaming maintenance loop
-    calls after each append window). Returns True if a compaction ran."""
-    if _stage_file_count(index_path, "pairs") <= max_files:
-        return False
-    compact_pairs(spark, index_path, n_buckets, codec)
-    return True
-
-
 def maybe_compact(
     spark: SparkSession, index_path: str, max_files: int = 64,
     n_buckets: int | None = None, codec: str = "snappy",
@@ -468,7 +455,6 @@ def build_index(
     bucket: int = 3,
     max_cells: int = 30,
     anc_min_level: int = cm.MIN_LEVEL,
-    n_salts: int = 16,
     n_buckets: int | None = None,
     resume: bool = True,
     codec: str = "snappy",
@@ -524,7 +510,7 @@ def build_index(
     # keys are dropped (unknown provenance) rather than left stale
     man.set_params(
         bucket=bucket, max_cells=max_cells, anc_min_level=anc_min_level,
-        key_col=key_col, n_salts=n_salts, build=build_params,
+        key_col=key_col, build=build_params,
     )
     if n_buckets is None:
         n_buckets = max(spark.sparkContext.defaultParallelism, 8)

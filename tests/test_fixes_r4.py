@@ -152,25 +152,6 @@ def test_manifest_flush_invalidates_doc_cache(tmp_path):
     assert manifest_doc(root)["params"]["bucket"] == 7
 
 
-def test_operators_md_claims_resolve():
-    """Every 'DuckDB ✅ (`key`...)' claim in OPERATORS.md names a query
-    registered in both QUERIES and ORACLES (r3 shipped a claim for a
-    nonexistent dedup_image_phash query), and every backticked `test_*`
-    name it cites is a test function or module under tests/ or
-    perfbench/."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
-    import selfcheck
-
-    assert selfcheck.audit_claims() == []
-    assert selfcheck.audit_test_citations() == []
-    # and the r4 fix itself is registered
-    from rgm import benchqueries as bq
-
-    assert "dedup_image_phash" in bq.QUERIES and "dedup_image_phash" in bq.ORACLES
-
-
 def test_polygon_payload_vs_polygon_query_refinement(spark, tmp_path):
     """End-to-end check of the newly batched polygon-vs-polygon refine
     path: polygon payloads indexed, polygon queries refined (intersects +

@@ -444,21 +444,6 @@ def test_slow_compaction_renews_or_fails_loudly(spark, tmp_path, monkeypatch):
     assert [p for p in os.listdir(out) if p.startswith("_writer.lock")] == []
 
 
-def test_operators_md_numeric_claims_resolve():
-    """Every efficiency-like number OPERATORS.md quotes against a BENCH
-    report must literally appear in that report (the r4 stale-0.826
-    lesson, machine-audited)."""
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
-    )
-    import selfcheck
-
-    assert selfcheck.audit_numeric_claims() == []
-
-
 # ---------------------------------------------------------------------------
 # WAV / Y4M codecs (verdict #8)
 # ---------------------------------------------------------------------------

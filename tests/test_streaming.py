@@ -239,7 +239,7 @@ def test_stream_dedup_ttl_readmits_after_horizon(spark, tmp_path):
 
 
 def test_pairs_compaction_preserves_queries(spark, tmp_path):
-    """N streamed appends fragment the pairs table; maybe_compact_pairs
+    """N streamed appends fragment the pairs table; maybe_compact
     rewrites it (atomic commit) with identical query results and fewer
     files."""
     base = spark.createDataFrame(
@@ -273,7 +273,7 @@ def test_pairs_compaction_preserves_queries(spark, tmp_path):
     keys_files_before = ridx._stage_file_count(out, "keys")
     assert keys_files_before > 2  # micro-batches fragmented keys/ too
 
-    assert not ridx.maybe_compact_pairs(spark, out, max_files=10_000)  # under threshold
+    assert ridx.maybe_compact(spark, out, max_files=10_000) == {"pairs": False, "keys": False}
     ran = ridx.maybe_compact(spark, out, max_files=1, n_buckets=2)
     assert ran == {"pairs": True, "keys": True}
     files_after = ridx._stage_file_count(out, "pairs")
