@@ -107,15 +107,6 @@ def main() -> None:
         import rgm.images as rimg_w
 
         rimg_w.images_table(spark, 32 * cpus).count()
-        wq = spark.range(8 * cpus).select(
-            F.col("id").cast("string").alias("query_id"),
-            F.lit("cap").alias("kind"),
-            (F.lit(30.0) + (F.col("id") % 10).cast("double")).alias("lat"),
-            F.lit(-100.0).alias("lng"),
-            F.lit(1000.0).alias("radius_m"),
-            F.lit(8).alias("max_cells"),
-        )
-        rq._cover_queries(wq, bucket=3, max_cells=8).count()
         # micro index build: warms the whole build path (covering UDF,
         # parquet writers, manifest, bitmap/roaring encode in postings)
         wpts = spark.range(64 * cpus).select(

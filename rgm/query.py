@@ -1,22 +1,24 @@
 """Query serving: Contains / Intersects / kNN / tile assignment.
 
 Re-expresses the reference reader's probe pipeline
-(/root/reference/cpp/src/RoaringGeoMapReader.cpp:39-91) as DataFrame joins
-(SURVEY §3.3). The hierarchy-containment match is decomposed into pure
-equi-joins (SURVEY §7.3 strategy (a)): the index stores every cover cell's
-lattice ancestors, so
+(/root/reference/cpp/src/RoaringGeoMapReader.cpp:39-91) over the index
+tables (SURVEY §3.3). The hierarchy-containment match is decomposed into
+pure cell equality (SURVEY §7.3 strategy (a)): the index stores every
+cover cell's lattice ancestors, so
 
-    join1: query origin cells  vs ALL index rows      (index finer-or-equal)
-    join2: query ancestor cells vs index ORIGIN rows  (index coarser)
+    match1: query origin cells  vs ALL index rows      (index finer-or-equal)
+    match2: query ancestor cells vs index ORIGIN rows  (index coarser)
 
-both on ``cell_id`` — one physical join with a residual condition. The
-query side is a covering of the (small) query batch, so Catalyst broadcasts
-it; the big pairs table is never shuffled. A coarse ``cell_l3`` IN-list
-derived from the query covering is pushed into the Parquet scan for
-row-group pruning — the Spark analog of the reference's SuRF prefilter +
-block-max index (A7/A8/A12). ``count_keys`` of a driver-planned batch
-does the same match without a join: the postings scan's mapInPandas looks
-each posting row's cell up in the covering it carries in its closure.
+both on ``cell_id``. Every query batch goes through one planner
+(_plan_query_cells): its covering is exploded into a (query_id, cell_id,
+is_anc) frame in driver memory. One in-scan probe (_cell_matcher) then
+looks each index row's cell up in that frame's sorted cell ids inside the
+mapInPandas that reads the table — ``pairs`` for candidate_keys/search,
+``postings`` for count_keys — so no query relation is built or broadcast
+and the index tables are never shuffled. A coarse ``cell_l3`` IN-list
+derived from the covering is pushed into the Parquet scan for row-group
+pruning — the Spark analog of the reference's SuRF prefilter + block-max
+index (A7/A8/A12).
 
 Cell-level matches are a sound superset; ``refine=True`` applies the exact
 geometry predicate (rgm.geo) to survivors, making results equal to the
@@ -36,42 +38,18 @@ from pyspark.sql import types as T
 
 from . import cellmath as cm
 from . import bitmap as bm
-from .index import PARENT3_EXPR, _ensure_region_cols, load_keys, open_index
-from .udfs import REGION_COLS, make_cover_udf, make_tile_udf, refine_udf
+from .index import _ensure_region_cols, load_keys, open_index
+from .udfs import REGION_COLS, compute_covers, make_tile_udf, refine_udf
 
 
-def _cover_queries(queries: DataFrame, bucket: int, max_cells: int) -> DataFrame:
-    """queries (query_id + region cols) -> + cells / ancs arrays."""
-    q = _ensure_region_cols(queries, max_cells)
-    cover_udf = make_cover_udf(bucket)
-    return q.withColumn("qcov", cover_udf(*[F.col(c) for c in REGION_COLS]))
-
-
-# query batches up to this size are planned driver-side: the covering runs
-# as one small job and the exploded cell list and the level-3 prune
-# prefixes are built with numpy in driver memory (a broadcast join needs
-# the query side there anyway). count_keys probes the cell list inside its
-# postings scan; search makes it a local DataFrame for the broadcast join.
-# This is the planner's only batch-size split: knn and
-# similarity.ivf_search run one distributed path at every batch size
-SMALL_QUERY_ROWS = 100_000
-
-# ...but the covering KERNEL only runs on the driver below this row count.
-# BENCH/QUERY_FLOORS.md rep 0 measured the all-driver planner at ~0.46 ms
-# per cap query (14.9s serial at 32k caps), flat in cores — it pinned the
-# query stages' N→4N pair efficiency at ~0.29 regardless of batch size.
-# Above the threshold the kernel runs as one mapInPandas pass at default
-# parallelism and only the exploded (query_id, cell_id) frame returns to
-# the driver; below it, one ~2s Spark job floor would cost more than the
-# serial kernel saves.
+# query batches up to this many rows run the covering kernel on the
+# driver; above it the kernel runs as one mapInPandas pass at default
+# parallelism over the collected rows. On one cached cap batch (local[4],
+# 4 vCPU, 2 reps each): 4,200 caps took 0.50-0.53 s on the driver vs
+# 0.47-0.58 s distributed, 32,768 caps 3.6-3.7 s vs 1.5-1.6 s. The driver
+# kernel costs about 0.1 ms per cap and a Spark job has a fixed floor, so
+# 4096 sits near break-even on 4 slots.
 DRIVER_COVER_ROWS = 4096
-
-# count_keys batches up to this size finish their bitmap union on the
-# driver. Timed against the distributed final on the same plan (25k-point
-# clustered index, local[4], 4 vCPU, 0.5-3 km and 5-30 km caps): as fast
-# or faster at 4,200 and 32,768 caps, 8-12% slower at 100,000 caps (driver
-# memory equal either way: planning the batch dominates it).
-DRIVER_FINAL_ROWS = 32_768
 
 # count_keys' driver-side final unions its collected partial bitmaps in
 # query-disjoint chunks of about this many bitmap bytes, a few chunks at a
@@ -87,8 +65,7 @@ _NUM_REGION_COLS = ("lat", "lng", "radius_m", "lat_lo", "lat_hi", "lng_lo", "lng
 
 def _explode_covers(qids: np.ndarray, cov: pd.DataFrame) -> pd.DataFrame:
     """Covering kernel output (cells/ancs lists per query) -> flat
-    (query_id, cell_id, is_anc, q_l3) frame. Shared by the driver-side
-    planner and the distributed mapInPandas worker."""
+    (query_id, cell_id, is_anc, q_l3) frame."""
     lens_c = np.array([len(x) for x in cov["cells"]], dtype=np.int64)
     lens_a = np.array([len(x) for x in cov["ancs"]], dtype=np.int64)
     cid = np.concatenate(
@@ -109,79 +86,10 @@ def _explode_covers(qids: np.ndarray, cov: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"query_id": qid, "cell_id": cid, "is_anc": anc, "q_l3": l3})
 
 
-def _covers_distributed(
-    spark: SparkSession, q: DataFrame, bucket: int
-) -> pd.DataFrame:
-    """Run the covering kernel over the query batch as ONE mapInPandas pass
-    at default parallelism and collect only the exploded cell frame. The
-    query batch is still broadcast-regime small (<= SMALL_QUERY_ROWS), so
-    the result lands in driver memory exactly as the all-driver path's and
-    everything downstream of the planner is the same."""
-    from .udfs import compute_covers
-
-    n_parts = max(int(spark.sparkContext.defaultParallelism), 1)
-    sel = q.select("query_id", *REGION_COLS).repartition(n_parts)
-
-    def worker(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for c in _NUM_REGION_COLS:
-                pdf[c] = pd.to_numeric(pdf[c], errors="coerce")
-            cov = compute_covers(
-                pdf["kind"], pdf["lat"], pdf["lng"], pdf["radius_m"],
-                pdf["lat_lo"], pdf["lat_hi"], pdf["lng_lo"], pdf["lng_hi"],
-                pdf["verts"], pdf["cell_id"], pdf["max_cells"], bucket,
-            )
-            yield _explode_covers(pdf["query_id"].to_numpy(), cov)
-
-    return sel.mapInPandas(worker, schema=_Q_CELLS_SCHEMA).toPandas()
-
-
-def plan_query_cells(
-    spark: SparkSession,
-    queries: DataFrame,
-    bucket: int,
-    max_cells: int,
-) -> tuple[DataFrame, list[int] | None]:
-    """-> (q_cells(query_id, cell_id, is_anc, q_l3), prune prefixes or None).
-
-    A batch of up to SMALL_QUERY_ROWS rows is planned on the driver
-    (_plan_query_cells): its exploded cell frame becomes a local relation
-    for the broadcast join and the prune prefixes come back as a list.
-    Larger batches stay lazy and the prefixes are None."""
-    planned = _plan_query_cells(spark, queries, bucket, max_cells)
-    if planned is None:
-        return _lazy_query_cells(queries, bucket, max_cells), None
-    out = planned[0]
-    if not len(out):
-        return spark.createDataFrame([], _Q_CELLS_SCHEMA), []
-    return spark.createDataFrame(out, schema=_Q_CELLS_SCHEMA), _prefixes(out)
-
-
-def _plan_query_cells(
-    spark: SparkSession, queries: DataFrame, bucket: int, max_cells: int
-) -> tuple[pd.DataFrame, int] | None:
-    """(exploded cell frame (query_id, cell_id, is_anc, q_l3), row count)
-    of a batch of up to SMALL_QUERY_ROWS rows, built in driver memory;
-    None for a larger batch.
-
-    The raw region rows are collected (one Spark job). Below
-    DRIVER_COVER_ROWS the covering kernel (rgm.udfs.compute_covers — the
-    same code the executor UDF runs) also runs here, so no further Spark
-    job runs before the index is read; above it the kernel runs as one
-    distributed pass (_covers_distributed)."""
-    q = _ensure_region_cols(queries, max_cells)
-    rows = q.select("query_id", *REGION_COLS).limit(SMALL_QUERY_ROWS + 1).collect()
-    if len(rows) > SMALL_QUERY_ROWS:
-        return None
-    if not rows:
-        return _explode_covers(np.empty(0, object), pd.DataFrame({"cells": [], "ancs": []})), 0
-    if len(rows) > DRIVER_COVER_ROWS:
-        return _covers_distributed(spark, q, bucket), len(rows)
-    from .udfs import compute_covers
-
-    pdf = pd.DataFrame([r.asDict() for r in rows])
+def _cover_frame(pdf: pd.DataFrame, bucket: int) -> pd.DataFrame:
+    """Region rows (query_id + REGION_COLS) -> exploded cell frame, through
+    the covering kernel the executor UDF runs (rgm.udfs.compute_covers).
+    Shared by the driver-side planner and the distributed pass."""
     for c in _NUM_REGION_COLS:
         pdf[c] = pd.to_numeric(pdf[c], errors="coerce")
     cov = compute_covers(
@@ -189,27 +97,111 @@ def _plan_query_cells(
         pdf["lat_lo"], pdf["lat_hi"], pdf["lng_lo"], pdf["lng_hi"],
         pdf["verts"], pdf["cell_id"], pdf["max_cells"], bucket,
     )
-    return _explode_covers(pdf["query_id"].to_numpy(), cov), len(rows)
+    return _explode_covers(pdf["query_id"].to_numpy(), cov)
+
+
+def _covers_distributed(spark: SparkSession, rows: DataFrame, bucket: int) -> pd.DataFrame:
+    """Run the covering kernel over the collected region rows as ONE
+    mapInPandas pass at default parallelism and collect only the exploded
+    cell frame, so everything downstream of the planner is the same as for
+    a driver-covered batch."""
+    n_parts = max(int(spark.sparkContext.defaultParallelism), 1)
+
+    def worker(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield _cover_frame(pdf, bucket)
+
+    return rows.repartition(n_parts).mapInPandas(worker, schema=_Q_CELLS_SCHEMA).toPandas()
+
+
+def plan_query_cells(
+    spark: SparkSession,
+    queries: DataFrame,
+    bucket: int,
+    max_cells: int,
+) -> tuple[DataFrame, list[int]]:
+    """-> (q_cells(query_id, cell_id, is_anc, q_l3), prune prefixes): the
+    planner's cell frame (_plan_query_cells) as a local relation, and its
+    level-3 prune prefixes."""
+    out = _plan_query_cells(spark, queries, bucket, max_cells)
+    return _cells_relation(spark, out), _prefixes(out)
+
+
+def _plan_query_cells(
+    spark: SparkSession, queries: DataFrame, bucket: int, max_cells: int
+) -> pd.DataFrame:
+    """The exploded cell frame (query_id, cell_id, is_anc, q_l3) of a query
+    batch, built in driver memory — the one planner of every query call.
+
+    The batch's region rows are collected once (one Spark job); the
+    caller's lineage is not evaluated again. Up to DRIVER_COVER_ROWS rows
+    the covering kernel also runs here, so no further Spark job runs
+    before the index is read; above it the kernel runs as one distributed
+    pass over the collected rows (_covers_distributed)."""
+    sel = _ensure_region_cols(queries, max_cells).select("query_id", *REGION_COLS)
+    rows = sel.collect()
+    if not rows:
+        return _explode_covers(np.empty(0, object), pd.DataFrame({"cells": [], "ancs": []}))
+    if len(rows) > DRIVER_COVER_ROWS:
+        return _covers_distributed(spark, spark.createDataFrame(rows, sel.schema), bucket)
+    return _cover_frame(pd.DataFrame([r.asDict() for r in rows]), bucket)
+
+
+def _cells_relation(spark: SparkSession, q_cells: pd.DataFrame) -> DataFrame:
+    if not len(q_cells):
+        return spark.createDataFrame([], _Q_CELLS_SCHEMA)
+    return spark.createDataFrame(q_cells, schema=_Q_CELLS_SCHEMA)
 
 
 def _prefixes(q_cells: pd.DataFrame) -> list[int]:
-    """The level-3 prune prefixes of a driver-planned cell frame."""
+    """The level-3 prune prefixes of a planned cell frame."""
     return sorted(int(x) for x in pd.unique(q_cells["q_l3"]))
 
 
-def _lazy_query_cells(queries: DataFrame, bucket: int, max_cells: int) -> DataFrame:
-    covered = _cover_queries(queries, bucket, max_cells)
-    q_origin = covered.select(
-        "query_id", F.explode("qcov.cells").alias("cell_id"), F.lit(False).alias("is_anc")
-    )
-    from .index import anc_lattice_sql
+def _scan(idx, table: str, q_cells: pd.DataFrame, prune: bool, *cols: str) -> DataFrame:
+    """``cols`` of an index table, zone-map pruned to the covering's
+    level-3 prefixes: the IN-filter reaches Parquet row-group stats (SuRF
+    analog)."""
+    df = idx.read(table)
+    if prune:
+        df = df.filter(F.col("cell_l3").isin(_prefixes(q_cells)))
+    return df.select(*cols)
 
-    q_anc = covered.select(
-        "query_id",
-        F.explode(F.expr(anc_lattice_sql("qcov.cells", bucket))).alias("cell_id"),
-        F.lit(True).alias("is_anc"),
-    )
-    return q_origin.unionByName(q_anc).withColumn("q_l3", F.expr(PARENT3_EXPR))
+
+def _cell_matcher(q_cells: pd.DataFrame):
+    """-> (match, query ids by code): the in-scan probe of a planned cell
+    frame — the reference reader's per-cell posting lookup
+    (RoaringGeoMapReader.cpp:39-91). ``match(pdf)`` takes a batch of index
+    rows (cell_id, is_origin, ...) and returns (row, code): the batch row
+    and the int32 query code of every match.
+
+    The closure carries the frame's sorted unique cell ids, CSR offsets
+    into per-entry query codes and an is_anc flag per entry (PySpark ships
+    a pickled command over 1 MiB as a broadcast). An index row meets every
+    entry of its cell; an entry for a lattice ancestor of a query cell only
+    matches an origin row (an index cover cell coarser than the query's):
+    a pair matches only if ``is_origin | ~is_anc``."""
+    codes, qids = pd.factorize(q_cells["query_id"], use_na_sentinel=False)
+    order = np.argsort(q_cells["cell_id"].to_numpy(), kind="stable")
+    cells = q_cells["cell_id"].to_numpy()[order]
+    first = np.flatnonzero(np.r_[True, cells[1:] != cells[:-1]])
+    ucell, off = cells[first], np.append(first, len(cells))
+    e_code = codes[order].astype(np.int32)
+    e_anc = q_cells["is_anc"].to_numpy(bool)[order]
+
+    def match(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        cell = pdf["cell_id"].to_numpy()
+        pos = np.minimum(np.searchsorted(ucell, cell), len(ucell) - 1)
+        hit = np.flatnonzero(ucell[pos] == cell)
+        lo = off[pos[hit]]
+        n = off[pos[hit] + 1] - lo
+        row = np.repeat(hit, n)
+        ent = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(int(n.sum()))
+        keep = pdf["is_origin"].to_numpy(bool)[row] | ~e_anc[ent]
+        return row[keep], e_code[ent[keep]]
+
+    return match, np.asarray(qids, dtype=object)
 
 
 def index_bucket(index_path: str, bucket: int | None) -> int:
@@ -233,40 +225,37 @@ def candidate_keys(
     """Cell-level candidate (query_id, key_id) pairs — the reference's
     bitmap-union result set (A17) before geometric refinement.
 
-    mode='equi' (default, the scale path): both hierarchy branches are one
-    broadcast equi-join against the ancestor-exploded pairs table
-    (SURVEY §7.3a).
+    mode='equi' (default, the scale path): the in-scan probe
+    (_cell_matcher) matches both hierarchy branches inside the mapInPandas
+    that reads the pruned ``pairs`` scan (SURVEY §7.3a); each scan
+    partition yields its distinct (query_id, key_id) pairs, and one
+    ``distinct`` dedups across partitions.
 
     mode='range' (validation): executes the reference's LITERAL
     decomposition — descendant branch as a Hilbert-interval range join of
     the query cells' [range_min, range_max] against index ORIGIN cells
     (RoaringGeoMapReader.cpp:46-54, Block.h:189-222), ancestor branch as the
     equi-join of query-ancestors vs origin cells (:57-64). A broadcast
-    nested-loop range join — kept as the §7.3b cross-check of the equi
-    reformulation (tests assert both modes return identical key sets), not
-    for production volume. Range endpoints share the query cell's face, so
-    the int64 BETWEEN is safe (no sign-boundary crossing).
+    nested-loop range join over the planned cells as a local relation,
+    sharing no code with the probe — kept as the §7.3b cross-check of the
+    equi reformulation (tests assert both modes return identical key
+    sets), not for production volume. Range endpoints share the query
+    cell's face, so the int64 BETWEEN is safe (no sign-boundary crossing).
     """
     if mode not in ("equi", "range"):
         raise ValueError(mode)
     idx = open_index(spark, index_path)
-    q_cells, prefixes = plan_query_cells(
+    q_cells = _plan_query_cells(
         spark, queries, idx.bucket if bucket is None else bucket, max_cells
     )
-
-    pairs = idx.read("pairs")
-    if prune:
-        if prefixes is None:
-            prefixes = [r["q_l3"] for r in q_cells.select("q_l3").distinct().collect()]
-        # zone-map pruning: the query covering's level-3 prefixes are tiny;
-        # the IN-filter reaches Parquet row-group stats (SuRF analog)
-        pairs = pairs.filter(F.col("cell_l3").isin(prefixes))
+    pairs = _scan(idx, "pairs", q_cells, prune, "cell_id", "is_origin", "key_id")
 
     if mode == "range":
+        q_rel = _cells_relation(spark, q_cells)
         origin_pairs = pairs.filter(F.col("is_origin"))
         rb = _range_bounds_udf()
         q_rng = (
-            q_cells.filter(~F.col("is_anc"))
+            q_rel.filter(~F.col("is_anc"))
             .withColumn("rb", rb(F.col("cell_id")))
             .select("query_id", F.col("rb.lo").alias("lo"), F.col("rb.hi").alias("hi"))
         )
@@ -275,16 +264,29 @@ def candidate_keys(
             (origin_pairs["cell_id"] >= F.col("lo"))
             & (origin_pairs["cell_id"] <= F.col("hi")),
         ).select("query_id", "key_id")
-        q_anc = q_cells.filter(F.col("is_anc")).select("query_id", "cell_id")
+        q_anc = q_rel.filter(F.col("is_anc")).select("query_id", "cell_id")
         anc = origin_pairs.join(F.broadcast(q_anc), on="cell_id").select(
             "query_id", "key_id"
         )
         return desc.unionByName(anc).distinct()
 
-    joined = pairs.join(
-        F.broadcast(q_cells), on="cell_id", how="inner"
-    ).filter(F.col("is_origin") | ~F.col("is_anc"))
-    return joined.select("query_id", "key_id").distinct()
+    schema = T.StructType([T.StructField("query_id", T.StringType()), pairs.schema["key_id"]])
+    if not len(q_cells):
+        return spark.createDataFrame([], schema)
+    match, qids = _cell_matcher(q_cells)
+
+    def partial_distinct(it):
+        # each match packs its query code over its (uint32) key_id into one
+        # int64, so a single-key np.unique dedups the partition's pairs
+        got = []
+        for pdf in it:
+            row, code = match(pdf)
+            got.append((code.astype(np.int64) << 32) | pdf["key_id"].to_numpy(np.int64)[row])
+        packed = np.unique(np.concatenate(got)) if got else np.empty(0, np.int64)
+        if len(packed):
+            yield pd.DataFrame({"query_id": qids[packed >> 32], "key_id": packed & 0xFFFFFFFF})
+
+    return pairs.mapInPandas(partial_distinct, schema).distinct()
 
 
 def search(
@@ -387,50 +389,6 @@ def _count_frame(codes: np.ndarray, blobs, names) -> pd.DataFrame:
     return pd.DataFrame({"query_id": names[c], "n_keys": ends - starts})
 
 
-def _concat(it) -> pd.DataFrame | None:
-    chunks = [pdf for pdf in it if len(pdf)]
-    return pd.concat(chunks, ignore_index=True) if chunks else None
-
-
-def _probe_partials(q_cells: pd.DataFrame):
-    """-> (mapInPandas function, query ids by code) that joins a
-    driver-planned cell frame with postings (cell_id, is_origin, bitmap)
-    rows inside the scan — the reference reader's per-cell posting lookup
-    (RoaringGeoMapReader.cpp:39-91) — and yields one (code, bitmap)
-    partial per query and partition.
-
-    The closure carries the frame's sorted unique cell ids, CSR offsets
-    into per-entry int32 query codes and an is_anc flag per entry
-    (PySpark ships a pickled command over 1 MiB as a broadcast). A posting
-    row meets every entry of its cell; an entry for a lattice ancestor of
-    a query cell only counts against an origin posting (an index cover
-    cell coarser than the query's)."""
-    codes, qids = pd.factorize(q_cells["query_id"], use_na_sentinel=False)
-    order = np.argsort(q_cells["cell_id"].to_numpy(), kind="stable")
-    cells = q_cells["cell_id"].to_numpy()[order]
-    first = np.flatnonzero(np.r_[True, cells[1:] != cells[:-1]])
-    ucell, off = cells[first], np.append(first, len(cells))
-    e_code = codes[order].astype(np.int32)
-    e_anc = q_cells["is_anc"].to_numpy(bool)[order]
-
-    def partial_union(it):
-        got_codes, got_blobs = [], []
-        for pdf in it:
-            cell = pdf["cell_id"].to_numpy()
-            pos = np.minimum(np.searchsorted(ucell, cell), len(ucell) - 1)
-            hit = np.flatnonzero(ucell[pos] == cell)
-            lo = off[pos[hit]]
-            n = off[pos[hit] + 1] - lo
-            row = np.repeat(hit, n)
-            ent = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(int(n.sum()))
-            keep = pdf["is_origin"].to_numpy(bool)[row] | ~e_anc[ent]
-            got_codes.append(e_code[ent[keep]])
-            got_blobs.append(pdf["bitmap"].to_numpy()[row[keep]])
-        if got_codes and sum(map(len, got_codes)):
-            c, blobs = _partials(np.concatenate(got_codes), np.concatenate(got_blobs))
-            yield pd.DataFrame({"code": c.astype(np.int32), "bitmap": blobs})
-
-    return partial_union, qids
 
 
 def count_keys(
@@ -445,39 +403,38 @@ def count_keys(
     the bitmap fastunion path (A16/A17), never touching per-key rows.
 
     Postings exist for origin cells AND their lattice-ancestor rollups, so
-    the match is the same hierarchy equi-join as ``search``: the query's
+    the match is the same hierarchy match as ``search``: the query's
     origin cells match any posting row; the query's ancestor cells match
     origin postings only.
 
-    A batch planned on the driver (up to SMALL_QUERY_ROWS rows) is joined
-    inside the mapInPandas that reads the pruned postings scan
-    (_probe_partials), with no query relation and no broadcast join; each
-    scan partition yields one (query code, partial bitmap) per query. Up to
-    DRIVER_FINAL_ROWS rows the partials are collected and unioned on the
-    driver in query-disjoint chunks of about _FINAL_CHUNK_BYTES, on up to
-    one thread per task slot, and the result comes back as a local
-    DataFrame; above it the union runs distributed after a shuffle by
-    code. Larger batches stay lazy: a broadcast join of the query cells
-    with postings, then the distributed union by query_id. Either way a
-    query without candidates has no row."""
+    The planned batch is matched inside the mapInPandas that reads the
+    pruned postings scan (the in-scan probe, _cell_matcher), with no query
+    relation and no broadcast join; each scan partition yields one (query
+    code, partial bitmap) per query. The partials are collected and
+    unioned on the driver in query-disjoint chunks of about
+    _FINAL_CHUNK_BYTES, on up to one thread per task slot, and the result
+    comes back as a local DataFrame. A query without candidates has no
+    row."""
     idx = open_index(spark, index_path)
-    bucket = idx.bucket if bucket is None else bucket
-    postings = idx.read("postings")
-    planned = _plan_query_cells(spark, queries, bucket, max_cells)
-    if planned is None:
-        return _count_lazy(postings, _lazy_query_cells(queries, bucket, max_cells), prune)
-    q_cells, n_rows = planned
+    q_cells = _plan_query_cells(
+        spark, queries, idx.bucket if bucket is None else bucket, max_cells
+    )
     if not len(q_cells):
         return spark.createDataFrame([], _COUNT_SCHEMA)
-    if prune:
-        postings = postings.filter(F.col("cell_l3").isin(_prefixes(q_cells)))
-    partial_union, qids = _probe_partials(q_cells)
-    partials = postings.select("cell_id", "is_origin", "bitmap").mapInPandas(
-        partial_union, "code int, bitmap binary"
-    )
-    if n_rows > DRIVER_FINAL_ROWS:
-        return _final_union(partials, qids)
-    pdf = partials.toPandas()
+    match, qids = _cell_matcher(q_cells)
+
+    def partial_union(it):
+        got_codes, got_blobs = [], []
+        for pdf in it:
+            row, code = match(pdf)
+            got_codes.append(code)
+            got_blobs.append(pdf["bitmap"].to_numpy()[row])
+        if got_codes and sum(map(len, got_codes)):
+            c, blobs = _partials(np.concatenate(got_codes), np.concatenate(got_blobs))
+            yield pd.DataFrame({"code": c.astype(np.int32), "bitmap": blobs})
+
+    postings = _scan(idx, "postings", q_cells, prune, "cell_id", "is_origin", "bitmap")
+    pdf = postings.mapInPandas(partial_union, "code int, bitmap binary").toPandas()
     if not len(pdf):
         return spark.createDataFrame([], _COUNT_SCHEMA)
     codes, blobs = pdf["code"].to_numpy(), pdf["bitmap"].to_numpy()
@@ -487,51 +444,6 @@ def count_keys(
             lambda m: _count_frame(codes[m], blobs[m], qids), (codes % n == i for i in range(n))
         ))
     return spark.createDataFrame(pd.concat(parts, ignore_index=True), _COUNT_SCHEMA)
-
-
-def _count_lazy(postings: DataFrame, q_cells: DataFrame, prune: bool) -> DataFrame:
-    """count_keys of a batch above SMALL_QUERY_ROWS: broadcast join of the
-    lazily covered query cells with postings, a partial union per scan
-    partition, then a distributed union after a shuffle by query_id."""
-    if prune:
-        prefixes = [r["q_l3"] for r in q_cells.select("q_l3").distinct().collect()]
-        postings = postings.filter(F.col("cell_l3").isin(prefixes))
-    matched = postings.join(F.broadcast(q_cells), on="cell_id", how="inner").filter(
-        F.col("is_origin") | ~F.col("is_anc")
-    )
-
-    def partial_union(it):
-        # partition-local: collapse each scan partition's matched posting
-        # rows to one partial bitmap per query (map-side combine, no shuffle)
-        pdf = _concat(it)
-        if pdf is not None:
-            codes, uniq = pd.factorize(pdf["query_id"])
-            c, blobs = _partials(codes, pdf["bitmap"].to_numpy())
-            yield pd.DataFrame({"query_id": uniq[c], "bitmap": blobs})
-
-    return _final_union(
-        matched.select("query_id", "bitmap").mapInPandas(partial_union, "query_id string, bitmap binary")
-    )
-
-
-def _final_union(partials: DataFrame, names=None) -> DataFrame:
-    """The distributed final: shuffle the (key, bitmap) partials by key,
-    union each key's bitmaps and count. Keys are query ids, or int query
-    codes into ``names``."""
-    key = partials.columns[0]
-
-    def final_count(it):
-        pdf = _concat(it)
-        if pdf is not None:
-            codes, uniq = pd.factorize(pdf[key])
-            ids = uniq if names is None else names[np.asarray(uniq)]
-            yield _count_frame(codes, pdf["bitmap"].to_numpy(), ids)
-
-    # fixed fan-in for the final union: the partials are one row per
-    # (scan partition, query), so a handful of reducers suffices at any
-    # parallelism level — tying this to shuffle_partitions made the tiny
-    # final stage slower the more cores the session had
-    return partials.repartition(8, key).mapInPandas(final_count, _COUNT_SCHEMA)
 
 
 def _range_bounds_udf():

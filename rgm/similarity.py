@@ -6,9 +6,6 @@
   coarse quantizer, corpus materialized cell-partitioned on disk under a
   manifest, probes read only the nprobe queried cells (real parquet
   partition pruning, PartitionFilters in the scan).
-- ivf_topk: the index-free IVF variant (centroids derived and cells
-  assigned inline per call) — kept for ad-hoc corpora that are already in
-  memory; repeated querying belongs on the materialized index.
 
 Top-k execution: scoring never funnels full-volume rows into one partition
 per query. Each scan partition first reduces to its local top-k per query
@@ -119,17 +116,6 @@ def brute_topk(
         ).alias("cosine"),
     )
     return _final_topk(scored, q_id_col, id_col, k)
-
-
-def make_centroids(
-    vectors: DataFrame, n_cells: int, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> np.ndarray:
-    """Deterministic coarse quantizer: the n_cells vectors with the smallest
-    ids, RAW (cell ranking uses full cosine, so no pre-normalization — this
-    keeps the doubles identical to what an oracle reads from the table).
-    Swap for kmeans on a real corpus; the collect is n_cells rows."""
-    rows = vectors.orderBy(id_col).limit(n_cells).select(vec_col).collect()
-    return np.asarray([r[0] for r in rows], dtype=np.float64)
 
 
 def _centroid_cosines(vec_col_expr, v_norm_expr, centroids: np.ndarray) -> list:
@@ -295,8 +281,8 @@ def build_ivf_index(
     """Materialize an IVF index: train the coarse quantizer, assign every
     vector its cell ONCE, and write the corpus cell-partitioned to disk
     with an atomic manifest commit (the same lifecycle as the spatial
-    index, rgm.index.build_index) — closing the r2 judge finding that
-    ivf_topk recomputed centroids and assignments per query call.
+    index, rgm.index.build_index), so no query call recomputes centroids
+    or assignments.
 
     Training runs numpy k-means on a deterministic driver-side HASH sample
     (``hash_sample``: xxhash64(id) % m == 0, id-sorted — unbiased w.r.t.
@@ -478,42 +464,3 @@ def ivf_search(
     qvecs = q.select(q_id_col, q_vec_col).dropDuplicates([q_id_col])
     cand = vec.join(survivors, on=id_col).join(qvecs, on=q_id_col)
     return _final_topk(_exact(cand), q_id_col, id_col, k)
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "query_id",
-    q_vec_col: str = "q_embedding",
-    use_expr: bool | None = None,
-) -> DataFrame:
-    """IVF top-k: probe only the nprobe nearest coarse cells per query.
-
-    Approximate (recall < 1 when the true neighbor lives in an unprobed
-    cell); tests measure recall against brute_topk, and the driver oracle
-    (rgm.benchqueries) mirrors the exact same centroid/probe math in SQL."""
-    centroids = make_centroids(vectors, n_cells, vec_col, id_col)
-    if use_expr is None:
-        use_expr = centroids.size <= 8192
-    v_cells = assign_cells(vectors, centroids, vec_col, use_expr)
-
-    q = queries.select(
-        F.col(q_id_col), F.col(q_vec_col),
-        F.explode(
-            probe_cells_col(F.col(q_vec_col), centroids, nprobe, use_expr)
-        ).alias("cell"),
-    )
-    cand = v_cells.join(F.broadcast(q), on="cell")
-    scored = cand.select(
-        F.col(q_id_col), F.col(id_col),
-        (
-            _dot(F.col(vec_col), F.col(q_vec_col))
-            / (_norm(F.col(vec_col)) * _norm(F.col(q_vec_col)))
-        ).alias("cosine"),
-    )
-    return _final_topk(scored, q_id_col, id_col, k)

@@ -125,8 +125,8 @@ def compute_covers(
     verts: pd.Series, cell_id: pd.Series, max_cells: pd.Series,
     bucket: int, anc_min_level: int = cm.MIN_LEVEL, with_ancs: bool = True,
 ) -> pd.DataFrame:
-    """Pure covering kernel shared by the executor UDF and the driver-side
-    small-batch query planner (rgm.query.plan_query_cells): region columns ->
+    """Pure covering kernel shared by the executor UDF and the query
+    planner (rgm.query._plan_query_cells): region columns ->
     DataFrame(cells[, ancs], min_cell_ord).
 
     cells = covering denormalized to the level lattice (reference
@@ -135,10 +135,10 @@ def compute_covers(
     cover cell, order-shifted (reference key clustering order,
     RoaringGeoMapWriter.h:20-24).
 
-    Distributed consumers (build, big query batches) set with_ancs=False and
-    derive ancestors JVM-side (rgm.index.anc_lattice_sql — pure bit math,
-    validated against cm.ancestors_at_lattice) so the Arrow boundary carries
-    only the covering itself.
+    Distributed consumers (the index build, streamed appends) set
+    with_ancs=False and derive ancestors JVM-side (rgm.index.anc_lattice_sql
+    — pure bit math, validated against cm.ancestors_at_lattice) so the
+    Arrow boundary carries only the covering itself.
     """
     covers = _region_covers(
         kind, lat, lng, radius_m, lat_lo, lat_hi, lng_lo, lng_hi,

@@ -574,56 +574,3 @@ def test_package_zip_content_addressed_and_deterministic():
         f.startswith("rgm_pkg_") and f.endswith(".tmp")
         for f in os.listdir(os.path.dirname(p2))
     )
-
-
-def test_distributed_query_planner_matches_driver(spark, monkeypatch):
-    """BENCH/QUERY_FLOORS.md rep 0 falsified the 'query floors amortize'
-    assumption: the all-driver covering kernel (~0.46 ms/cap) is a serial
-    component proportional to batch size, pinning query-stage pair
-    efficiency at ~0.29 at every batch scale. plan_query_cells now runs the
-    kernel via mapInPandas above DRIVER_COVER_ROWS; the exploded frame and
-    prune prefixes must be identical either way (same kernel, same cells).
-    The batch mixes caps, rects and real 3-vertex [lat, lng] polygon rings."""
-    import pandas as pd
-
-    from rgm import query as rq
-
-    n = 64
-    q = spark.range(n).selectExpr(
-        "concat('q', id) as query_id",
-        "case when id % 3 = 0 then 'cap' when id % 3 = 1 then 'rect' else 'polygon' end as kind",
-        "cast(10 + id % 40 as double) as lat",
-        "cast(-50 + id % 100 as double) as lng",
-        "cast(1000 + 100 * (id % 7) as double) as radius_m",
-        "cast(10 + id % 40 as double) as lat_lo",
-        "cast(11 + id % 40 as double) as lat_hi",
-        "cast(-50 + id % 100 as double) as lng_lo",
-        "cast(-49 + id % 100 as double) as lng_hi",
-        """case when id % 3 = 2 then array(
-             array(cast(10 + id % 40 as double), cast(-50 + id % 100 as double)),
-             array(cast(10.8 + id % 40 as double), cast(-49.6 + id % 100 as double)),
-             array(cast(10.4 + id % 40 as double), cast(-50.8 + id % 100 as double))
-           ) end as verts""",
-        "cast(null as long) as cell_id",
-        "cast(30 as int) as max_cells",
-    )
-
-    def plan(threshold):
-        monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", threshold)
-        cells, prefixes = rq.plan_query_cells(spark, q, bucket=3, max_cells=30)
-        pdf = (
-            cells.toPandas()
-            .sort_values(["query_id", "cell_id", "is_anc"])
-            .reset_index(drop=True)
-        )
-        return pdf, prefixes
-
-    drv, drv_pref = plan(threshold=n + 1)  # all-driver kernel
-    dist, dist_pref = plan(threshold=1)  # mapInPandas kernel
-    assert drv_pref == dist_pref and len(drv_pref) > 0
-    assert len(drv) > 0
-    # a ~1 degree triangle covers several cells (a degenerate 1-vertex
-    # ring covered one)
-    origin = drv.loc[~drv["is_anc"]].groupby("query_id").size()
-    assert all(origin.get(f"q{i}", 0) > 1 for i in range(n) if i % 3 == 2)
-    pd.testing.assert_frame_equal(drv, dist)

@@ -416,18 +416,20 @@ def _counts(df) -> dict:
 
 
 def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeypatch):
-    """A driver-planned batch is joined with postings inside the scan's
-    mapInPandas: no BroadcastExchange in its plan, which the lazy plan
-    above SMALL_QUERY_ROWS keeps. Up to DRIVER_FINAL_ROWS it finishes its
-    bitmap union on the driver, in one or many query-disjoint chunks, and
-    returns a local result; above it (planned on the driver or lazily) the
-    union runs distributed after a shuffle. Every path, with the covering
-    on the driver or distributed, gives the same (query_id, n_keys), equal
-    to the distinct cell-level candidates of search(refine=False), on a
-    batch with two ids of one region, nested caps that share cells, a
-    query without candidates, and a tiny cap whose lattice-ancestor cells
-    meet postings that are all non-origin (rollups of other keys) and must
-    not count: a pair counts only if ``is_origin | ~is_anc``."""
+    """Every query call probes inside its index scan's mapInPandas: no
+    BroadcastExchange in the plan of count_keys or candidate_keys. count_keys
+    finishes its bitmap union on the driver, in one or many query-disjoint
+    chunks, and returns a local result. With the covering on the driver or
+    distributed, the counts equal the distinct candidates of
+    candidate_keys(mode="range") — the literal range decomposition, which
+    shares no code with the probe — and the probe's candidate key set
+    equals range mode's. The batch has two ids of one region, nested caps
+    that share cells, a query without candidates, and a tiny cap whose
+    lattice-ancestor cells meet postings that are all non-origin (rollups
+    of other keys) and must not count: a pair counts only if
+    ``is_origin | ~is_anc``."""
+    from collections import Counter
+
     rng = np.random.default_rng(17)
     n = 400
     lat = 37.0 + rng.uniform(-0.5, 0.5, n)
@@ -450,14 +452,11 @@ def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeyp
     ]
     q = spark.createDataFrame(rows, _CAPS)
 
-    cands = {
-        r["query_id"]: r["n"]
-        for r in rq.search(spark, out, q, refine=False)
-        .groupBy("query_id").agg(F.countDistinct("key_id").alias("n")).collect()
-    }
+    ranged = {tuple(r) for r in rq.candidate_keys(spark, out, q, mode="range").collect()}
+    cands = dict(Counter(qid for qid, _ in ranged))
     assert len(cands) == 15 and cands["dup-a"] == cands["dup-b"] and cands["nested"] > 0
     # the tiny cap's ancestor cells do meet postings, all of them non-origin
-    planned, _ = rq._plan_query_cells(spark, q, 3, 30)
+    planned = rq._plan_query_cells(spark, q, 3, 30)
     lonely = planned[planned["query_id"] == "lonely"]
     met = ridx.load_postings(spark, out).filter(
         F.col("cell_id").isin([int(c) for c in lonely["cell_id"]])
@@ -481,26 +480,94 @@ def test_count_keys_driver_and_distributed_finals_agree(spark, tmp_path, monkeyp
     assert on_driver._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
     assert len(collected) == 1 and "MapInPandas" in collected[0]
     assert "BroadcastExchange" not in collected[0]
+    monkeypatch.undo()
     got = {"driver": _counts(on_driver)}
     monkeypatch.setattr(rq, "_FINAL_CHUNK_BYTES", 64)  # a chunk per query or two
     got["chunked"] = _counts(rq.count_keys(spark, out, q))
     monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", 2)
     got["distributed cover"] = _counts(rq.count_keys(spark, out, q))
-
-    monkeypatch.setattr(rq, "DRIVER_FINAL_ROWS", len(rows) - 1)
-    distributed_df = rq.count_keys(spark, out, q)
-    assert "MapInPandas" in plan_of(distributed_df)
-    assert "BroadcastExchange" not in plan_of(distributed_df)
-    got["distributed cover, distributed final"] = _counts(distributed_df)
-    monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", 4096)
-    got["distributed final"] = _counts(rq.count_keys(spark, out, q))
-    monkeypatch.setattr(rq, "SMALL_QUERY_ROWS", len(rows) - 1)  # lazy plan too
-    lazy = rq.count_keys(spark, out, q)
-    assert "BroadcastExchange" in plan_of(lazy)
-    got["lazy"] = _counts(lazy)
-
     for path, counts in got.items():
         assert counts == cands, path
+
+    for cover_rows in (4096, 2):
+        monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", cover_rows)
+        equi = rq.candidate_keys(spark, out, q)
+        assert {tuple(r) for r in equi.collect()} == ranged, cover_rows
+        assert "MapInPandas" in plan_of(equi)
+        assert "BroadcastExchange" not in plan_of(equi)
+
+
+def test_planner_evaluates_query_rows_once(spark, small_index, monkeypatch):
+    """The distributed covering pass runs over the rows the planner already
+    collected, not over the caller's lineage again: a Python UDF in the
+    batch's lineage sees each row exactly once per count_keys call."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def bump(lat):
+        seen.add(1)
+        return lat
+
+    rows = [(f"q{i}", "cap", SF[0] + 0.01 * i, SF[1], 5_000.0) for i in range(6)]
+    q = spark.createDataFrame(rows, _CAPS).withColumn(
+        "lat", F.udf(bump, "double").asNondeterministic()(F.col("lat"))
+    )
+    monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", 2)
+    counts = _counts(rq.count_keys(spark, small_index, q))
+    assert seen.value == len(rows)
+    assert counts and set(counts) <= {r[0] for r in rows}
+
+
+def test_distributed_query_planner_matches_driver(spark, monkeypatch):
+    """BENCH/QUERY_FLOORS.md rep 0 falsified the 'query floors amortize'
+    assumption: the all-driver covering kernel (~0.46 ms/cap) is a serial
+    component proportional to batch size, pinning query-stage pair
+    efficiency at ~0.29 at every batch scale. plan_query_cells now runs the
+    kernel via mapInPandas above DRIVER_COVER_ROWS; the exploded frame and
+    prune prefixes must be identical either way (same kernel, same cells).
+    The batch mixes caps, rects and real 3-vertex [lat, lng] polygon rings."""
+    import pandas as pd
+
+    from rgm import query as rq
+
+    n = 64
+    q = spark.range(n).selectExpr(
+        "concat('q', id) as query_id",
+        "case when id % 3 = 0 then 'cap' when id % 3 = 1 then 'rect' else 'polygon' end as kind",
+        "cast(10 + id % 40 as double) as lat",
+        "cast(-50 + id % 100 as double) as lng",
+        "cast(1000 + 100 * (id % 7) as double) as radius_m",
+        "cast(10 + id % 40 as double) as lat_lo",
+        "cast(11 + id % 40 as double) as lat_hi",
+        "cast(-50 + id % 100 as double) as lng_lo",
+        "cast(-49 + id % 100 as double) as lng_hi",
+        """case when id % 3 = 2 then array(
+             array(cast(10 + id % 40 as double), cast(-50 + id % 100 as double)),
+             array(cast(10.8 + id % 40 as double), cast(-49.6 + id % 100 as double)),
+             array(cast(10.4 + id % 40 as double), cast(-50.8 + id % 100 as double))
+           ) end as verts""",
+        "cast(null as long) as cell_id",
+        "cast(30 as int) as max_cells",
+    )
+
+    def plan(threshold):
+        monkeypatch.setattr(rq, "DRIVER_COVER_ROWS", threshold)
+        cells, prefixes = rq.plan_query_cells(spark, q, bucket=3, max_cells=30)
+        pdf = (
+            cells.toPandas()
+            .sort_values(["query_id", "cell_id", "is_anc"])
+            .reset_index(drop=True)
+        )
+        return pdf, prefixes
+
+    drv, drv_pref = plan(threshold=n + 1)  # all-driver kernel
+    dist, dist_pref = plan(threshold=1)  # mapInPandas kernel
+    assert drv_pref == dist_pref and len(drv_pref) > 0
+    assert len(drv) > 0
+    # a ~1 degree triangle covers several cells (a degenerate 1-vertex
+    # ring covered one)
+    origin = drv.loc[~drv["is_anc"]].groupby("query_id").size()
+    assert all(origin.get(f"q{i}", 0) > 1 for i in range(n) if i % 3 == 2)
+    pd.testing.assert_frame_equal(drv, dist)
 
 
 def test_count_keys_empty_batch_is_empty(spark, small_index):

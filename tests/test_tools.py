@@ -38,6 +38,40 @@ def test_operators_md_numeric_claims_resolve():
     assert checkoracle.audit_numeric_claims() == []
 
 
+def test_numeric_claims_match_whole_numbers(tmp_path, monkeypatch):
+    """A quoted number passes only on the same whole number in the cited
+    report: "0.56" fails on "0.560", and passes on "0.56" at a sentence
+    end."""
+    (tmp_path / "BENCH").mkdir()
+    (tmp_path / "BENCH" / "R.md").write_text("pair 0 ratio 0.560; best 0.9.\n")
+    monkeypatch.setattr(checkoracle, "ROOT", str(tmp_path))
+
+    def audit(claim):
+        monkeypatch.setattr(checkoracle, "_operators_md", lambda: claim)
+        return checkoracle.audit_numeric_claims()
+
+    assert audit("probes read 0.56 (`BENCH/R.md`)") == ["0.56 not in ['BENCH/R.md']"]
+    assert audit("probes read 0.560 (`BENCH/R.md`)") == []
+    (tmp_path / "BENCH" / "R.md").write_text("probes read as low as 0.56.\n")
+    assert audit("probes read 0.56 (`BENCH/R.md`)") == []
+
+
+def test_values_equal_rejects_null_and_dtype_mismatches():
+    """The oracle comparison is null- and dtype-sensitive: a null never
+    equals a value (not even the string the old fill used), and int32 vs
+    int64 columns differ."""
+    import pandas as pd
+
+    def eq(a, b):
+        return checkoracle._values_equal(pd.DataFrame({"c": a}), pd.DataFrame({"c": b}))
+
+    assert eq(["a", None], ["a", None])
+    assert not eq(["a", None], ["a", "\0null"])
+    assert not eq(["a", "\0null"], ["a", None])
+    assert not eq(pd.Series([1, 2], dtype="int32"), pd.Series([1, 2], dtype="int64"))
+    assert eq(pd.Series([1, 2], dtype="int64"), pd.Series([1, 2], dtype="int64"))
+
+
 @pytest.mark.parametrize(
     "mode, report",
     [

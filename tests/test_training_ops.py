@@ -111,21 +111,6 @@ def test_brute_topk_matches_numpy(spark, emb):
         assert [v for _, v in sorted(by_q[str(qi)])] == want
 
 
-def test_ivf_topk_recall(spark, emb):
-    from rgm import similarity as rsim
-
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("string").alias("query_id"),
-        F.col("embedding").alias("q_embedding"),
-    )
-    brute = rsim.brute_topk(emb, queries, 10).collect()
-    ivf = rsim.ivf_topk(emb, queries, 10, n_cells=16, nprobe=8).collect()
-    b = {(r["query_id"], r["vec_id"]) for r in brute}
-    i = {(r["query_id"], r["vec_id"]) for r in ivf}
-    recall = len(b & i) / len(b)
-    assert recall >= 0.6, f"IVF recall too low: {recall}"
-
-
 def _ivf_probe_all_matches_brute(spark, vectors, out, n_cells, n_queries, k):
     """With every cell probed, ivf_search is exact: it must equal
     brute_topk by (query_id, vec_id, rank)."""

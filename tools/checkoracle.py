@@ -59,8 +59,9 @@ def audit_numeric_claims() -> list[str]:
     later reps had eroded to 0.755 in the cited report). For every
     blank-line-separated paragraph of OPERATORS.md that cites one or more
     `BENCH/*.md` files, every efficiency-like decimal (0.xx / 0.xxx /
-    1.xx) in the paragraph must appear as a substring of at least one
-    cited file. Returns 'number (files...)' offenders."""
+    1.xx) in the paragraph must appear as a whole number in at least one
+    cited file: "0.56" does not pass on "0.560". Returns
+    'number (files...)' offenders."""
     bad = []
     for para in _operators_md().split("\n\n"):
         files = sorted(set(_BENCH_FILE_RE.findall(para)))
@@ -75,7 +76,8 @@ def audit_numeric_claims() -> list[str]:
             else:
                 bad.append(f"cited file missing: {fn}")
         for num in _NUM_RE.findall(para):
-            if not any(num in c for c in contents):
+            whole = re.compile(rf"(?<![\w.]){re.escape(num)}(?!\w|\.\d)")
+            if not any(whole.search(c) for c in contents):
                 bad.append(f"{num} not in {files}")
     return bad
 
@@ -171,13 +173,22 @@ def _values_equal(a: pd.DataFrame, b: pd.DataFrame) -> bool:
             if not np.array_equal(av, bv, equal_nan=True):
                 return False
         else:
-            if ka in "iu" and kb in "iu":
-                if av.dtype != bv.dtype:
-                    return False
-            if not (pd.Series(av).astype(object).fillna("\0null") ==
-                    pd.Series(bv).astype(object).fillna("\0null")).all():
+            if ka in "iu" and kb in "iu" and av.dtype != bv.dtype:
+                return False
+            if _mismatch(av, bv).any():
                 return False
     return True
+
+
+def _mismatch(av: np.ndarray, bv: np.ndarray) -> np.ndarray:
+    """Per-row mismatch of two equal-length non-float columns: a null
+    equals only a null, and two values compare with ==."""
+    a, b = pd.Series(av).astype(object), pd.Series(bv).astype(object)
+    na, nb = a.isna().to_numpy(), b.isna().to_numpy()
+    neq = na != nb
+    both = ~(na | nb)
+    neq[both] = a[both].to_numpy() != b[both].to_numpy()
+    return neq
 
 
 def main() -> int:
@@ -244,8 +255,7 @@ def main() -> int:
                             print(f"  [{name}] dtype diff col={c}: {av.dtype} vs {bv.dtype}",
                                   file=sys.stderr)
                         elif not _values_equal(sc[[c]], oc[[c]]):
-                            neq = (av.astype(object).fillna("\0") != bv.astype(object).fillna("\0"))
-                            idx = list(np.nonzero(neq.to_numpy())[0][:3])
+                            idx = list(np.nonzero(_mismatch(av.to_numpy(), bv.to_numpy()))[0][:3])
                             print(f"  [{name}] value diff col={c} rows={idx}: "
                                   f"{[ (av.iloc[i], bv.iloc[i]) for i in idx ]}",
                                   file=sys.stderr)
