@@ -100,19 +100,25 @@ def _cover_frame(pdf: pd.DataFrame, bucket: int) -> pd.DataFrame:
     return _explode_covers(pdf["query_id"].to_numpy(), cov)
 
 
-def _covers_distributed(spark: SparkSession, rows: DataFrame, bucket: int) -> pd.DataFrame:
+def _covers_distributed(
+    spark: SparkSession, rows: pd.DataFrame, schema: T.StructType, bucket: int
+) -> pd.DataFrame:
     """Run the covering kernel over the collected region rows as ONE
-    mapInPandas pass at default parallelism and collect only the exploded
-    cell frame, so everything downstream of the planner is the same as for
-    a driver-covered batch."""
-    n_parts = max(int(spark.sparkContext.defaultParallelism), 1)
+    mapInPandas pass and collect only the exploded cell frame, so
+    everything downstream of the planner is the same as for a
+    driver-covered batch. The rows go to Spark through Arrow as a local
+    relation, which Spark scans in default-parallelism slices: the pass
+    needs no shuffle. (Handing Spark the list of Rows instead verifies,
+    pickles and decodes them row by row: on 4,200 caps 0.35 s more per
+    call, with twice the spread.)"""
 
     def worker(batches):
         for pdf in batches:
             if len(pdf):
                 yield _cover_frame(pdf, bucket)
 
-    return rows.repartition(n_parts).mapInPandas(worker, schema=_Q_CELLS_SCHEMA).toPandas()
+    rel = spark.createDataFrame(rows, schema)
+    return rel.mapInPandas(worker, schema=_Q_CELLS_SCHEMA).toPandas()
 
 
 def plan_query_cells(
@@ -143,9 +149,10 @@ def _plan_query_cells(
     rows = sel.collect()
     if not rows:
         return _explode_covers(np.empty(0, object), pd.DataFrame({"cells": [], "ancs": []}))
-    if len(rows) > DRIVER_COVER_ROWS:
-        return _covers_distributed(spark, spark.createDataFrame(rows, sel.schema), bucket)
-    return _cover_frame(pd.DataFrame([r.asDict() for r in rows]), bucket)
+    pdf = pd.DataFrame([r.asDict() for r in rows])
+    if len(pdf) > DRIVER_COVER_ROWS:
+        return _covers_distributed(spark, pdf, sel.schema, bucket)
+    return _cover_frame(pdf, bucket)
 
 
 def _cells_relation(spark: SparkSession, q_cells: pd.DataFrame) -> DataFrame:
